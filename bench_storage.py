@@ -98,7 +98,7 @@ def main() -> None:
         "l_quantity", F.col("l_quantity") + 2
     )
     coll.append_df(upd2, key_col="_id")
-    seqs = coll._seq_dirs()
+    seqs = sorted(coll.segment_stats())
     t0 = time.perf_counter()
     coll.compact(upto=seqs[-1], since=seqs[1])
     t["compact_range"] = round(time.perf_counter() - t0, 3)

@@ -368,10 +368,11 @@ def kv_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-erasure audit (the GDPR workflow on the Bitcask model):
     tombstone every row of a data subject (keys divisible by 13), then
     ``compact()`` — and PROVE the subject is physically gone by scanning
-    the raw segment files, where even the subject's tombstones must no
-    longer appear (an append-only log without compaction still *stores*
-    erased data; the reference acknowledges the need at
-    ``hadro/engine.py:53-54``).
+    the raw log (every listed file, shadowed versions and tombstones
+    included; full compaction deletes every unlisted file), where even
+    the subject's tombstones must no longer appear (an append-only log
+    without compaction still *stores* erased data; the reference
+    acknowledges the need at ``hadro/engine.py:53-54``).
 
     Output: the subject's live row count before erasure (derivable —
     oracle recomputes it from ``orders``), the subject's RAW physical
@@ -402,7 +403,7 @@ def kv_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_subject_live_before"))
     )
     raw_after = (
-        spark.read.parquet(copy._data_path)
+        copy._log()
         .withColumn("o_orderkey", F.col(KEY_COL).cast("bigint"))
         .filter(subject)
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_subject_raw_after"))

@@ -18,25 +18,45 @@ def _local_scratch() -> str:
     resolution policy for ALL re-derivable scratch — r12 ADVICE: the old
     duplicate /dev/shm detection here meant SPARK_GRAFT_SCRATCH_DIR moved
     the checkpoints but not the shuffle files).  A free-space check guards
-    the tmpfs default: shuffle *spill* exists to relieve memory pressure,
-    so when /dev/shm is already scarce (< 4 GiB free) spilling into RAM
-    would convert memory pressure into ENOSPC — fall back to the system
-    temp dir instead."""
+    the tmpfs default, never an explicit ``$SPARK_GRAFT_SCRATCH_DIR``:
+    shuffle *spill* exists to relieve memory pressure, so when /dev/shm
+    is already scarce (< 4 GiB free) spilling into RAM would convert
+    memory pressure into ENOSPC — fall back to the system temp dir
+    instead."""
     override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if override:
         return override
-    from hadrodb_spark.config import scratch_dir
+    from hadrodb_spark.config import SCRATCH_ENV, scratch_dir
 
     root = scratch_dir()
-    try:
-        st = os.statvfs(root)
-        if st.f_bavail * st.f_frsize < 4 * 1024**3:
-            import tempfile
+    if not os.environ.get(SCRATCH_ENV):
+        try:
+            st = os.statvfs(root)
+            if st.f_bavail * st.f_frsize < 4 * 1024**3:
+                import tempfile
 
-            return tempfile.gettempdir()
-    except OSError:
-        pass
+                return tempfile.gettempdir()
+        except OSError:
+            pass
     return os.path.join(root, "spark_local")
+
+
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+def _state_store_confs() -> dict[str, str]:
+    """State-store provider ($SPARK_GRAFT_STATESTORE_PROVIDER, default
+    RocksDB), plus changelog checkpointing only when the resolved
+    provider is RocksDB — other providers do not read the flag."""
+    provider = os.environ.get("SPARK_GRAFT_STATESTORE_PROVIDER", _ROCKSDB_PROVIDER)
+    confs = {"spark.sql.streaming.stateStore.providerClass": provider}
+    if provider == _ROCKSDB_PROVIDER:
+        confs[
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+        ] = "true"
+    return confs
 
 
 def get_spark(
@@ -116,19 +136,7 @@ def get_spark(
         # per-batch delta instead of re-snapshotting the full store.
         # Results are provider-invariant (state layout, not semantics);
         # env-overridable for deployments standardized on the HDFS store.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "SPARK_GRAFT_STATESTORE_PROVIDER",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            ),
-        )
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
+        .config(map=_state_store_confs())
         .config(
             "spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI_ENABLED", "false")
         )

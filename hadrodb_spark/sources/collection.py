@@ -32,14 +32,33 @@ Scale design: merge-on-read costs one hash shuffle on ``_key``; ``compact()``
 rewrites to the LWW view so steady-state reads are pure Parquet scans with
 predicate pushdown / column pruning (which the reference's ``scan()`` accepts
 but ignores — ``hadro/engine.py:139``; Spark honors both for free).
+
+Storage layout — manifest-listed snapshots (Bitcask hint files, Delta's
+log): the manifest head alone defines the collection.  Each commit's entry
+lists its read roots, relative to the collection dir: an ordinary commit's
+own ``segments/_seq=N`` dir (exactly one write produces it), or for a
+range-compacted entry ``h`` its merged files, moved into ``_seq=h/`` under
+new names.  A read hands the head's roots (a point get: its candidates')
+to one ``spark.read.parquet`` with ``basePath`` = ``segments``, so ``_seq``
+still comes from the path; unpublished or crashed writes are never listed,
+and a planned DataFrame keeps its files while compaction runs.  Range
+compaction's CAS moves the covered roots to a ``retired`` list stamped
+with the manifest version; a later range compaction deletes those more
+than ``_MANIFEST_KEEP`` versions behind the head.  Full compaction is
+quiesced by contract and deletes everything else at once, so erasure
+stays physical.  An older collection (entries without roots) migrates on
+open: one version lists every on-disk ``_seq=N`` dir — what the old
+directory-walking reader saw — and no file moves.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import logging
 import os
+import shutil
 import threading
 import uuid
 from collections.abc import Iterable, Mapping, Sequence
@@ -60,12 +79,17 @@ INTERNAL_COLS = (KEY_COL, SEQ_COL, SUB_COL, DELETED_COL)
 _SCHEMA_FILE = "_hadro_schema.json"
 _MANIFEST_FILE = "_hadro_manifest.json"  # legacy head (pre-r9, read-only)
 _DATA_DIR = "segments"
+_STATS_FIELDS = ("rows", "tombstones", "min_key", "max_key", "unique_keys")
 _ZORDER_COL = "_zorder"  # transient clustering key, never written to disk
 _ZBUCKET_COL = "_zbucket"  # transient deterministic partition rep, ditto
 
 
 class HadroError(Exception):
     """Collection-level error (bad schema, unknown key, invalid record)."""
+
+
+class _Superseded(Exception):
+    """A range compaction's covered entries changed before its CAS."""
 
 
 # --- manifest commit protocol (cross-host safe) ---------------------------
@@ -85,7 +109,7 @@ class HadroError(Exception):
 # (tests/test_manifest_cas.py).
 
 _MANIFEST_V_PREFIX = "_hadro_manifest.v"
-_MANIFEST_KEEP = 16      # retained superseded heads (readers re-list on miss)
+_MANIFEST_KEEP = 16      # retained superseded heads; also how long retired roots live
 _MANIFEST_NAME_KEEP = 1024  # tombstone-NAME retention: bounds the writer
 #   stall the CAS tolerates (a writer stalled > NAME_KEEP versions
 #   mid-commit is assumed dead — 64× the content window) while keeping
@@ -96,29 +120,6 @@ _CAS_MAX_RETRIES = 256   # consecutive lost races before giving up
 
 _LOG = logging.getLogger("hadrodb_spark.collection")
 
-
-def _rename_exchange(a: str, b: str) -> bool:
-    """Atomically SWAP two paths (Linux ``renameat2(RENAME_EXCHANGE)``).
-
-    Used by the range-merge segment swap: without it there is a
-    two-syscall window in which a concurrent reader listing the data
-    directory sees NO ``_seq=h`` at all and silently resolves LWW to
-    older shadowed versions — the one failure mode of the swap that is
-    wrong-and-quiet rather than loud.  Returns ``False`` when libc or
-    the filesystem doesn't support the exchange (caller falls back to
-    the two-rename sequence)."""
-    import ctypes
-
-    try:
-        libc = ctypes.CDLL(None, use_errno=True)
-        fn = libc.renameat2
-    except (OSError, AttributeError):
-        return False
-    at_fdcwd, rename_exchange = -100, 2
-    return (
-        fn(at_fdcwd, os.fsencode(a), at_fdcwd, os.fsencode(b), rename_exchange)
-        == 0
-    )
 # process-wide count of swallowed post-publish directory fsyncs (r11
 # ADVICE: the swallow is correct — retrying a published mutate risks
 # double-apply — but repeated failures must be observable); guarded by a
@@ -230,9 +231,12 @@ def _cas_update_manifest(path: str, mutate) -> dict[str, Any]:
     therefore be a pure function of the manifest it is handed, which
     every caller's closure is.  A writer that dies between temp-write
     and link leaves only an ignorable temp file; a writer that dies
-    after link has fully committed."""
+    after link has fully committed.  ``mutate`` sees ``m["version"]``
+    already set to the version it will publish as (the stamp of
+    retired roots)."""
     for _ in range(_CAS_MAX_RETRIES):
         head, m = _manifest_head(path)
+        m["version"] = head + 1
         mutate(m)
         target = _manifest_v_path(path, head + 1)
         tmp = os.path.join(
@@ -333,8 +337,7 @@ def _gc_manifests(path: str, head: int) -> None:
             if v <= name_floor:
                 os.unlink(p)
             elif v <= floor and os.path.getsize(p) > 0:
-                with open(p, "w"):
-                    pass  # truncate in place: name stays occupied
+                os.truncate(p, 0)  # in place: the name stays occupied
         except OSError:
             pass
 
@@ -439,6 +442,41 @@ class HadroCollection:
             self._save_schema()
 
         self._rebuild_full_schema()
+        self._migrate_layout()
+
+    def _migrate_layout(self) -> None:
+        """Old-layout migration (module docstring) of a manifest that no
+        commit of this layout marked ``listed``, or that holds an entry
+        without roots: list every on-disk ``_seq=N`` dir that is not in
+        flight; one without a stats entry gets unknown (``None``) stats,
+        which never prune."""
+
+        def old_layout(m: dict[str, Any]) -> bool:
+            segs = m["segments"].values()
+            return not m.get("listed") or any("roots" not in s for s in segs)
+
+        m = self._read_manifest()
+        if not old_layout(m):
+            return
+        on_disk = {
+            name.split("=", 1)[1]
+            for name in os.listdir(self._data_path)
+            if name.startswith(SEQ_COL + "=") and name.split("=", 1)[1].isdigit()
+        }
+        if not on_disk and not m["segments"]:
+            return  # a new collection: its first commit marks it listed
+
+        def put(m: dict[str, Any]) -> None:
+            if not old_layout(m):
+                return  # another opener migrated it first
+            listed = on_disk - set(m.get("inflight", {}))
+            for k in listed:
+                m["segments"].setdefault(k, dict.fromkeys(_STATS_FIELDS))
+            for k, s in m["segments"].items():
+                s.setdefault("roots", [self._commit_root(k)] if k in listed else [])
+            m["listed"] = True
+
+        self._update_manifest(put)
 
     def _rebuild_full_schema(self) -> None:
         # Storage schema: user fields stored nullable so tombstone rows (all
@@ -524,6 +562,32 @@ class HadroCollection:
     def _data_path(self) -> str:
         return os.path.join(self.path, _DATA_DIR)
 
+    @staticmethod
+    def _commit_root(commit: int | str) -> str:
+        """An ordinary commit's read root, relative to the collection."""
+        return f"{_DATA_DIR}/{SEQ_COL}={commit}"
+
+    @staticmethod
+    def _roots(m: dict[str, Any], seqs: Iterable[int] | None = None) -> list[str]:
+        """Read roots of manifest ``m``'s entries (all, or just ``seqs``)."""
+        segs = m["segments"]
+        picked = sorted(map(int, segs)) if seqs is None else sorted(seqs)
+        return [r for n in picked for r in segs[str(n)]["roots"]]
+
+    def _reclaim(self, root: str) -> None:
+        """Delete a root no manifest version within retention lists: a
+        commit dir, or a data file with its Hadoop checksum sibling."""
+        p = os.path.join(self.path, root)
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+            return
+        crc = os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+        for f in (p, crc):
+            try:
+                os.unlink(f)
+            except FileNotFoundError:
+                pass
+
     # -------------------------------------------------------------- sequencing
     def _read_manifest(self) -> dict[str, Any]:
         return _manifest_head(self.path)[1]
@@ -551,11 +615,12 @@ class HadroCollection:
             holder["commit"] = int(m["commits"])
             m["commits"] = holder["commit"] + 1
             # IN-FLIGHT marker (r12): allocated but not yet recorded —
-            # cleared by _record_segment_stats / _reset_segment_stats
-            # once the segment write completes.  Range compaction reads
+            # cleared by _record_segment_stats (or a full rewrite) once
+            # the segment write completes.  Range compaction reads
             # this to avoid folding (or hoisting rows over) another
             # writer's incomplete commit; see compact().
             m.setdefault("inflight", {})[str(holder["commit"])] = True
+            m["listed"] = True  # every entry this code records has roots
 
         self._update_manifest(bump)
         return holder["commit"]
@@ -571,10 +636,10 @@ class HadroCollection:
         unique_keys: bool | None,
         key_bloom: str | None = None,
     ) -> None:
-        """Manifest-level statistics, one entry per commit directory
-        (``segments/_seq=N/``): row count, tombstone count, key bounds,
-        an optional key bloom filter, and whether keys are known-unique
-        within the commit.
+        """Publish a commit: its manifest entry holds the read root
+        (``segments/_seq=N/``) plus row count, tombstone count, key
+        bounds, an optional key bloom filter, and whether keys are
+        known-unique within the commit.
 
         This is the Iceberg/Delta manifest idea scaled down to a Bitcask
         log: at 100 TB the expensive part of a point lookup is not reading
@@ -589,54 +654,21 @@ class HadroCollection:
                 "max_key": max_key,
                 "unique_keys": unique_keys,
                 "key_bloom": key_bloom,
+                "roots": [self._commit_root(commit)],
             }
             m["clean"] = False  # any append may shadow existing keys
             m.setdefault("inflight", {}).pop(str(commit), None)
 
         self._update_manifest(put)
 
-    def _reset_segment_stats(self, commit: int, rows: int, min_key, max_key) -> None:
-        """After compact/optimize the log IS the live view: one commit,
-        no tombstones, unique keys — mark it ``clean`` so reads skip the
-        LWW merge entirely until the next write dirties the log."""
-
-        def put(m: dict[str, Any]) -> None:
-            m["segments"] = {
-                str(commit): {
-                    "rows": int(rows),
-                    "tombstones": 0,
-                    "min_key": min_key,
-                    "max_key": max_key,
-                    "unique_keys": True,
-                }
-            }
-            m["clean"] = True
-            # a full rewrite runs quiesced by contract and just erased
-            # every prior commit's history — any surviving in-flight
-            # marker is by definition stranded, so self-heal the lot
-            # instead of demanding per-seq clear_inflight (review
-            # finding)
-            m["inflight"] = {}
-
-        self._update_manifest(put)
-
-    def _seq_dirs(self) -> list[int]:
-        """Commit ids actually present on disk (``_seq=N`` hive dirs)."""
-        if not os.path.isdir(self._data_path):
-            return []
-        out = []
-        for name in os.listdir(self._data_path):
-            if name.startswith(SEQ_COL + "="):
-                try:
-                    out.append(int(name.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        return sorted(out)
-
     def segment_stats(self) -> dict[int, dict[str, Any]]:
-        """Per-commit manifest statistics (public introspection surface)."""
+        """Per-commit manifest statistics (public introspection surface),
+        keyed by commit id; the layout (read roots) is left out."""
         segs = self._read_manifest()["segments"]
-        return {int(k): dict(v) for k, v in segs.items()}
+        return {
+            int(k): {f: v for f, v in s.items() if f != "roots"}
+            for k, s in segs.items()
+        }
 
     def inflight_commits(self) -> list[int]:
         """Commits allocated but not yet recorded (another writer mid-
@@ -657,27 +689,22 @@ class HadroCollection:
 
         self._update_manifest(drop)
 
-    def _stats_if_complete(self) -> dict[int, dict[str, Any]] | None:
-        """Stats keyed by commit id, or None if any on-disk commit dir has
-        no manifest entry (e.g. a collection written by an older version) —
-        callers must then fall back to the distributed path."""
-        segs = self.segment_stats()
-        on_disk = self._seq_dirs()
-        if any(n not in segs for n in on_disk):
-            return None
-        return {n: segs[n] for n in on_disk}
-
-    def _candidate_seqs(self, keys: Sequence[str]) -> list[int] | None:
+    def _candidate_seqs(
+        self, keys: Sequence[str], segs: dict[str, Any] | None = None
+    ) -> list[int]:
         """Commits whose ``[min_key, max_key]`` — and, when present, key
         bloom — could contain any of ``keys`` (every version of a key,
         including its tombstones, lies in a commit whose bounds cover it
         and whose bloom was built over it, so pruning the rest preserves
-        LWW). None ⇒ stats incomplete, caller reads everything."""
-        stats = self._stats_if_complete()
-        if stats is None:
-            return None
+        LWW).  A migrated commit with unknown stats is always a
+        candidate."""
+        if segs is None:
+            segs = self._read_manifest()["segments"]
         cands = []
-        for n, s in stats.items():
+        for n, s in segs.items():
+            if s.get("rows") is None:
+                cands.append(int(n))
+                continue
             lo, hi = s.get("min_key"), s.get("max_key")
             if lo is None or hi is None:
                 continue  # tombstone-only empty commit or no rows
@@ -686,8 +713,8 @@ class HadroCollection:
                 lo <= k <= hi and (bloom is None or _bloom_maybe(bloom, k))
                 for k in keys
             ):
-                cands.append(n)
-        return cands
+                cands.append(int(n))
+        return sorted(cands)
 
     def _len_fast(self) -> int | None:
         """Driver-only ``len()`` when the manifest can prove it: the log is
@@ -697,11 +724,12 @@ class HadroCollection:
         workload). Returns None when correctness would require the merge."""
         if self._pending:
             return None
-        stats = self._stats_if_complete()
-        if stats is None:
-            return None
+        m = self._read_manifest()
+        stats = m["segments"]
+        if any(s.get("rows") is None for s in stats.values()):
+            return None  # a migrated commit with unknown stats
         total = sum(s["rows"] for s in stats.values())
-        if self._read_manifest()["clean"]:
+        if m["clean"]:
             return total
         if any(s["tombstones"] for s in stats.values()):
             return None
@@ -831,10 +859,11 @@ class HadroCollection:
         )
 
     def _write_segments(self, df: DataFrame, commit: int) -> None:
-        """One atomic Parquet commit into its own hive dir
-        (``segments/_seq=N/``, then any user ``partition_by`` dirs below):
-        time-travel (``_seq <= c``), stats-pruned point gets
-        (``_seq IN (...)``), and partition-key predicates all prune whole
+        """One Parquet write into the commit's own hive dir
+        (``segments/_seq=N/``, then any user ``partition_by`` dirs below),
+        invisible until ``_record_segment_stats`` lists it: stats-pruned
+        point gets read only their candidates' dirs, and time-travel
+        (``_seq <= c``) and partition-key predicates prune whole
         directories (PartitionFilters) before a single footer is opened —
         the scale path for time/tenant-keyed logs.
 
@@ -850,13 +879,10 @@ class HadroCollection:
             writer.parquet(target)
         except Exception:
             # Transient write failure (executor loss, disk full) in a
-            # SURVIVING process: clean up so the retry isn't haunted —
-            # drop the partial segment and this commit's in-flight
-            # marker (review finding: a stranded marker silently blocks
-            # range compaction at this seq forever).  If the cleanup
+            # SURVIVING process: drop the unlisted partial dir and this
+            # commit's in-flight marker (a stranded marker blocks range
+            # compaction at this seq until cleared).  If the cleanup
             # itself fails, the stranded marker IS the fail-safe.
-            import shutil
-
             try:
                 shutil.rmtree(target, ignore_errors=True)
                 self.clear_inflight(commit)
@@ -1030,17 +1056,20 @@ class HadroCollection:
         )
 
     # ------------------------------------------------------------------- reads
-    def _log(self) -> DataFrame:
-        """The raw log including shadowed versions and tombstones."""
+    def _log(self, roots: Sequence[str] | None = None) -> DataFrame:
+        """The raw log including shadowed versions and tombstones: the
+        head snapshot's read roots, or just ``roots``.  ``basePath`` keeps
+        ``_seq`` (and any ``partition_by`` column) coming from the path."""
         self.flush()
-        has_data = any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(self._data_path)
-            for f in files
-        )
-        if not has_data:
+        if roots is None:
+            roots = self._roots(self._read_manifest())
+        if not roots:
             return self.spark.createDataFrame([], self._full_schema)
-        df = self.spark.read.schema(self._full_schema).parquet(self._data_path)
+        df = (
+            self.spark.read.schema(self._full_schema)
+            .option("basePath", self._data_path)
+            .parquet(*[os.path.join(self.path, r) for r in roots])
+        )
         # partition columns come back as hive dirs; reorder to storage schema
         df = df.select(*[f.name for f in self._full_schema.fields])
         if self._defaults:
@@ -1113,29 +1142,30 @@ class HadroCollection:
             return False
 
     def _lww(self) -> DataFrame:
-        log = self._log()
+        self.flush()
+        m = self._read_manifest()
+        log = self._log(self._roots(m))
         # post-compaction fast path: the manifest proves one version per key
         # and no tombstones, so the KeyDir merge is the identity — reads are
         # then pure Parquet scans (pushdown + pruning, zero shuffle)
-        if not self._pending and self._read_manifest()["clean"]:
+        if m["clean"]:
             return log
         return self._latest(log, skew_safe=self._skew_safe_merge())
 
     def _pruned_lww(self, keys: Sequence[str]) -> DataFrame | None:
-        """LWW view pruned — via manifest key bounds — to the commit dirs
-        that could contain any of ``keys`` (partition filter on ``_seq``,
-        so non-matching commits are skipped before any footer is read).
-        None ⇒ the bounds prove no commit holds any of the keys. LWW-safe:
-        every version of a key, tombstones included, lies in a commit
-        whose bounds cover it."""
+        """LWW view pruned — via manifest key bounds and blooms — to the
+        read roots of the commits that could contain any of ``keys``, so
+        other commits are never listed or opened.  None ⇒ the manifest
+        proves no commit holds any of the keys.  LWW-safe: every version
+        of a key, tombstones included, lies in a commit whose bounds
+        cover it."""
         self.flush()
-        cand = self._candidate_seqs(keys)
-        if cand == []:
+        m = self._read_manifest()
+        cand = self._candidate_seqs(keys, m["segments"])
+        if not cand:
             return None
-        base = self._log()
-        if cand is not None:
-            base = base.filter(F.col(SEQ_COL).isin(cand))
-        if self._read_manifest()["clean"]:
+        base = self._log(self._roots(m, cand))
+        if m["clean"]:
             return base
         return self._latest(base)
 
@@ -1224,7 +1254,8 @@ class HadroCollection:
         manifest marks the log ``clean``, so reads are plain Parquet scans
         — no merge-on-read shuffle — until the next write. Time-travel
         history resets at the compaction point (the merge discards
-        shadowed versions, like Delta VACUUM).
+        shadowed versions, like Delta VACUUM).  It is quiesced maintenance:
+        every other file under ``segments/`` is deleted at once.
 
         Incremental compaction (``upto=h``): merge only the commits with
         ``_seq <= h`` — the cold tail — into one segment at ``_seq = h``,
@@ -1236,7 +1267,7 @@ class HadroCollection:
         small commits into one mid-tier segment at cost proportional to
         THAT RANGE, never re-rewriting the big base segment (without the
         lower bound every incremental pass re-merged the base, making
-        steady-state cost track the whole log).  Three invariants make
+        steady-state cost track the whole log).  These invariants make
         any range sound:
 
         - the merged rows keep ordering position ``h``, so any newer
@@ -1246,14 +1277,16 @@ class HadroCollection:
           position ``h ≥ s`` it still shadows them; keys absent from the
           range are untouched at their original positions;
         - tombstones whose key has no newer version are PRESERVED (not
-          purged — only a full compact may purge), so during and after the
-          swap no shadowed pre-range row can resurface;
-        - (r12) the range is truncated strictly below any IN-FLIGHT
-          commit (allocated, not yet recorded — see ``_next_commit``), so
-          a concurrent writer's incomplete segment is never folded,
-          deleted, or shadowed by hoisted older versions.  Full
-          compaction (``upto=None``) remains a quiesced-maintenance
-          operation: it rewrites the whole data directory."""
+          purged — only a full compact may purge), so no shadowed
+          pre-range row can resurface;
+        - the range is truncated strictly below any IN-FLIGHT commit
+          (allocated, not yet recorded — see ``_next_commit``), so a
+          concurrent writer's commit is never shadowed by rows hoisted
+          from below it to ``h``.
+
+        One manifest CAS swaps the covered entries for ``h`` and retires
+        their roots (module docstring), or drops the merge if another
+        compactor changed a covered entry first."""
         if upto is None:
             if since:
                 raise HadroError(
@@ -1262,55 +1295,22 @@ class HadroCollection:
                     "whole log"
                 )
             live = self._lww().filter(~F.col(DELETED_COL))
-            self._rewrite_segments(live, self._data_path + ".compact")
+            self._rewrite_segments(live)
             return
         self.flush()
-        on_disk = self._seq_dirs()
-        # Concurrent-writer safety (r12): another writer's commit between
-        # _next_commit and _record_segment_stats is IN-FLIGHT — its
-        # directory may be absent, partial, or complete-but-unrecorded.
-        # Folding the range across it is unsound twice over: a partial
-        # read would be merged and the directory deleted (data loss), and
-        # even SKIPPING it while merging commits on both sides would
-        # hoist an older version of a key from below the in-flight seq to
-        # position h above it, wrongly shadowing that writer's final
-        # rows at LWW.  So the merge range is TRUNCATED strictly below
-        # the lowest in-flight seq (everything below it is immutable
-        # history), and covered commits are those both recorded and on
-        # disk.  An ON-DISK directory with neither a stats entry nor an
-        # in-flight marker (a writer that crashed mid-commit BEFORE this
-        # protocol existed, or a foreign/restored dir) is treated as a
-        # blocker too — its completeness is unknowable, so merging or
-        # hoisting around it risks the same shadowing (review finding;
-        # a seq an earlier merge folded away has NO directory and blocks
-        # nothing).  On a quiesced modern collection all filters are
-        # no-ops.  A crashed writer's stranded marker keeps blocking
-        # merges at/above its seq — fail-safe; see ``clear_inflight``.
-        man = self._read_manifest()
-        recorded = {int(k) for k in man.get("segments", {})}
+        head, man = _manifest_head(self.path)
         blockers = [
-            i
-            for i in (int(k) for k in man.get("inflight", {}))
-            if since <= i <= upto
-        ] + [
-            n
-            for n in on_disk
-            if since <= n <= upto and n not in recorded
+            i for i in map(int, man.get("inflight", {})) if since <= i <= upto
         ]
         h_cap = min(blockers) - 1 if blockers else upto
-        covered = [
-            n for n in on_disk if since <= n <= h_cap and n in recorded
-        ]
+        covered = sorted(n for n in map(int, man["segments"]) if since <= n <= h_cap)
         if len(covered) < 2:
             return  # nothing to merge
-        h = max(covered)
-        # the merge input is pinned to the COVERED list, not the raw
-        # [since, h] range: an in-flight (unrecorded) segment's partial
-        # rows must not be hoisted to position h, where they would
-        # shadow that writer's final commit at LWW
-        merged = self._latest(
-            self._log().filter(F.col(SEQ_COL).isin(covered))
-        ).withColumn(SUB_COL, F.lit(0).cast("long"))
+        h = covered[-1]
+        snap = {str(n): man["segments"][str(n)] for n in covered}
+        merged = self._latest(self._log(self._roots(man, covered))).withColumn(
+            SUB_COL, F.lit(0).cast("long")
+        )
         obs = Observation()
         merged = merged.drop(SEQ_COL).observe(
             obs,
@@ -1319,76 +1319,62 @@ class HadroCollection:
             F.min(KEY_COL).alias("min_key"),
             F.max(KEY_COL).alias("max_key"),
         )
-        import shutil
-
-        # unique tmp per invocation (review finding): a FIXED tmp name let
-        # two overlapping same-host compactors clobber each other's merge
-        # output outside the flock and swap the wrong rows in at h
-        tmp = f"{self._data_path}.compact_inc.{uuid.uuid4().hex}"
+        # h's current files, listed before the move (a dir root's listing
+        # also retires files a merge that crashed before its CAS moved in)
+        old_h = []
+        for r in snap[str(h)]["roots"]:
+            p = os.path.join(self.path, r)
+            if not os.path.isdir(p):
+                old_h.append(r)
+                continue
+            found = glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
+            old_h += [os.path.relpath(f, self.path) for f in found]
+        tmp = os.path.join(self._data_path, f".merge.{uuid.uuid4().hex}")
+        h_dir = os.path.join(self._data_path, f"{SEQ_COL}={h}")
         try:
             writer = merged.write.mode("overwrite")
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
             writer.parquet(tmp)
             got = obs.get
-        except Exception:
+            # until the CAS, a reader whose root is the _seq=h dir may see
+            # these files too: they only repeat the range's LWW winners at h
+            moved = []
+            for src in glob.glob(os.path.join(tmp, "**", "*.parquet"), recursive=True):
+                dst = os.path.join(h_dir, os.path.relpath(src, tmp))
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
+                moved.append(os.path.relpath(dst, self.path))
+        finally:
             shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        # PRE-SWAP manifest publish (review finding): pop the covered
-        # entries and write h's merged stats BEFORE touching any data
-        # directory.  From here until the swap completes, some on-disk
-        # dirs have no manifest entry, so _stats_if_complete returns None
-        # and every pruned/fast read path falls back to the full
-        # distributed read — publishing AFTER the swap left a window
-        # where a reader pruned point-gets with the OLD h bounds/bloom
-        # over the NEW h contents and silently missed hoisted keys.  A
-        # crash in the window leaves a safe unpruned collection (old
-        # dirs intact, all versions readable); its on-disk-but-
-        # unrecorded covered dirs then BLOCK further range merges, and
-        # the documented recovery is a quiesced full compact.
+        # GC: roots retired more than _MANIFEST_KEEP versions ago
+        reclaim = [r for r in man.get("retired", []) if head - r[0] > _MANIFEST_KEEP]
+        for _, root in reclaim:
+            self._reclaim(root)
+
         def put(m: dict[str, Any]) -> None:
-            for n in covered:
-                m["segments"].pop(str(n), None)
+            if any(m["segments"].get(n) != e for n, e in snap.items()):
+                raise _Superseded
+            for n in snap:
+                del m["segments"][n]
             m["segments"][str(h)] = {
                 "rows": int(got["rows"]),
                 "tombstones": int(got["tombs"] or 0),
                 "min_key": got["min_key"],
                 "max_key": got["max_key"],
                 "unique_keys": True,  # the merge keeps one row per key
+                "roots": moved,
             }
+            retire = old_h + [self._commit_root(n) for n in covered[:-1]]
+            m["retired"] = [
+                r for r in m.get("retired", []) if r not in reclaim
+            ] + [[m["version"], r] for r in retire]
 
-        self._update_manifest(put)
-        # Swap under the commit lock (flock serializes COMPACTORS on this
-        # host; cross-host maintenance is single-owner by deployment
-        # contract).  _seq=h is replaced via an atomic RENAME_EXCHANGE
-        # where the OS supports it, so a concurrent reader's directory
-        # listing always sees exactly one _seq=h — old or new, both
-        # LWW-consistent (between the exchange and the old-dir drops a
-        # reader seeing new-h PLUS covered[:-1] is also consistent: every
-        # covered row is shadowed by its merged copy at h).  Honest
-        # residual: a reader that PLANNED file paths inside the covered
-        # dirs before the swap fails LOUDLY (FileNotFound) once they move
-        # to trash — retry the scan; the silent-wrong window (missing h)
-        # exists only on filesystems without the exchange.
-        import fcntl
-
-        with open(os.path.join(self.path, "_hadro_lock"), "a") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            trash = self._data_path + ".trash"
-            shutil.rmtree(trash, ignore_errors=True)
-            os.makedirs(trash)
-            h_dir = os.path.join(self._data_path, f"{SEQ_COL}={h}")
-            old_h = os.path.join(trash, f"{SEQ_COL}={h}")
-            if _rename_exchange(tmp, h_dir):
-                os.rename(tmp, old_h)  # tmp now holds the displaced old h
-            else:
-                os.rename(h_dir, old_h)
-                os.rename(tmp, h_dir)
-            for n in covered[:-1]:
-                d = os.path.join(self._data_path, f"{SEQ_COL}={n}")
-                if os.path.isdir(d):
-                    os.rename(d, os.path.join(trash, f"{SEQ_COL}={n}"))
-            shutil.rmtree(trash)
+        try:
+            self._update_manifest(put)
+        except _Superseded:
+            for r in moved:
+                self._reclaim(r)
 
     def export(self, path: str, format: str = "parquet", mode: str = "error") -> None:
         """Write the live LWW view out as plain parquet / json / csv —
@@ -1434,22 +1420,21 @@ class HadroCollection:
 
     def history(self) -> DataFrame:
         """The commit log as a DataFrame (Delta's DESCRIBE HISTORY analog):
-        one row per on-disk commit with its manifest statistics, plus the
-        log-wide ``clean`` flag. Commits predating stats capture surface
-        with null rows/tombstones rather than forcing a distributed count."""
+        one row per manifest entry with its statistics, plus the log-wide
+        ``clean`` flag. Commits predating stats capture surface with null
+        rows/tombstones rather than forcing a distributed count."""
         m = self._read_manifest()
-        segs = m["segments"]
         rows = [
             (
-                n,
-                (lambda s: s.get("rows"))(segs.get(str(n), {})),
-                segs.get(str(n), {}).get("tombstones"),
-                segs.get(str(n), {}).get("min_key"),
-                segs.get(str(n), {}).get("max_key"),
-                bool(segs.get(str(n), {}).get("unique_keys", False)),
+                int(n),
+                s.get("rows"),
+                s.get("tombstones"),
+                s.get("min_key"),
+                s.get("max_key"),
+                bool(s.get("unique_keys")),
                 bool(m["clean"]),
             )
-            for n in sorted(self._seq_dirs())
+            for n, s in sorted(m["segments"].items(), key=lambda kv: int(kv[0]))
         ]
         return self.spark.createDataFrame(
             rows,
@@ -1502,7 +1487,6 @@ class HadroCollection:
             live = self._with_zbucket_rep(live, n_files)
             self._rewrite_segments(
                 live,
-                self._data_path + ".optimize",
                 sort_cols=[_ZORDER_COL],
                 target_files=n_files,
                 partition_col=_ZBUCKET_COL,
@@ -1510,7 +1494,6 @@ class HadroCollection:
             return
         self._rewrite_segments(
             live,
-            self._data_path + ".optimize",
             sort_cols=list(sort_cols),
             target_files=target_files,
         )
@@ -1637,18 +1620,15 @@ class HadroCollection:
     def _rewrite_segments(
         self,
         df: DataFrame,
-        tmp: str,
         sort_cols: Sequence[str] | None = None,
         target_files: int | None = None,
         partition_col: str | None = None,
     ) -> None:
-        """Materialize ``df`` — re-sequenced into one fresh commit — to
-        ``tmp`` then swap it in with two renames: the live dir is moved
-        aside BEFORE the new one moves in, so a crash at any point leaves
-        either the old data live or the old data in ``.old`` (recoverable
-        by a rename) — never a window with no data directory at all."""
-        import shutil
-
+        """Materialize ``df`` — re-sequenced into one fresh commit — and
+        publish it as the whole collection, then delete every other file
+        under ``segments/``.  A crash before the publish leaves the old
+        snapshot live and the new dir unlisted; after it, the leftovers
+        are unlisted and the next full rewrite deletes them."""
         commit = self._next_commit()
         out = df.drop(SEQ_COL)
         if partition_col:
@@ -1682,19 +1662,33 @@ class HadroCollection:
             F.min(KEY_COL).alias("min_key"),
             F.max(KEY_COL).alias("max_key"),
         )
-        writer = out.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(os.path.join(tmp, f"{SEQ_COL}={commit}"))
-        old = self._data_path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self._data_path, old)
-        os.rename(tmp, self._data_path)
-        shutil.rmtree(old)
+        self._write_segments(out, commit)
         got = obs.get
-        self._reset_segment_stats(
-            commit, rows=got["rows"], min_key=got["min_key"], max_key=got["max_key"]
-        )
+
+        def put(m: dict[str, Any]) -> None:
+            # the log IS the live view now: one commit, no tombstones,
+            # unique keys — ``clean``, so reads skip the LWW merge until
+            # the next write.  A full rewrite runs quiesced by contract,
+            # so any in-flight marker is stranded: self-heal the lot
+            m["segments"] = {
+                str(commit): {
+                    "rows": int(got["rows"]),
+                    "tombstones": 0,
+                    "min_key": got["min_key"],
+                    "max_key": got["max_key"],
+                    "unique_keys": True,
+                    "roots": [self._commit_root(commit)],
+                }
+            }
+            m["clean"] = True
+            m["inflight"] = {}
+            m["retired"] = []
+
+        self._update_manifest(put)
+        keep = f"{SEQ_COL}={commit}"
+        for name in os.listdir(self._data_path):
+            if name != keep:
+                self._reclaim(os.path.join(_DATA_DIR, name))
 
     def transaction(self) -> "_Transaction":
         """``with hadro.transaction() as batch`` (``INTERFACE.md:40-43``):

@@ -581,6 +581,7 @@ def register(spark) -> None:
     """Register the source AND ship the package to executors — the reader
     class is pickled by reference, so executor Python workers must be able
     to import ``hadrodb_spark`` regardless of the driver's cwd."""
+    import glob
     import hashlib
     import tempfile
     import zipfile
@@ -596,13 +597,10 @@ def register(spark) -> None:
     # Spark's "exists and does not match contents" hard error (the
     # executors' import then still resolves to the first-shipped copy —
     # mid-session source edits remain unsupported, just non-fatal).
-    entries = []
-    for dirpath, _, files in os.walk(pkg_dir):
-        for fn in files:
-            if fn.endswith(".py"):
-                full = os.path.join(dirpath, fn)
-                entries.append((os.path.relpath(full, root), full))
-    entries.sort()
+    entries = sorted(
+        (os.path.relpath(full, root), full)
+        for full in glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)
+    )
     h = hashlib.md5()
     blobs = []
     for rel, full in entries:

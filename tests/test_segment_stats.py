@@ -62,7 +62,7 @@ def test_seq_partitioned_layout(coll):
         d for d in os.listdir(os.path.join(coll.path, "segments")) if d.startswith("_seq=")
     )
     assert len(dirs) == 2
-    assert coll._seq_dirs() == sorted(coll.segment_stats())
+    assert [int(d.split("=")[1]) for d in dirs] == sorted(coll.segment_stats())
 
 
 def test_append_df_stats_via_observe(spark, coll):
@@ -299,8 +299,7 @@ def test_incremental_compact_preserves_semantics(coll):
 
     after = sorted(tuple(r) for r in coll.scan().collect())
     assert before == after
-    assert coll._seq_dirs() == [1, 2, 3]           # 0 merged into 1
-    assert sorted(coll.segment_stats()) == [1, 2, 3]
+    assert sorted(coll.segment_stats()) == [1, 2, 3]  # 0 merged into 1
     # tombstone for b survives in the merged segment (purge needs full compact)
     merged = coll._log().filter("_seq = 1")
     assert merged.filter("_key = 'b' AND _deleted").count() == 1
@@ -324,7 +323,7 @@ def test_incremental_compact_noop_on_single_commit(coll):
     coll.set("a", {"title": "A", "n": 1})
     coll.flush()
     coll.compact(upto=99)                          # only one commit — no-op
-    assert coll._seq_dirs() == [0]
+    assert sorted(coll.segment_stats()) == [0]
     assert coll.get("a")["title"] == "A"
 
 
@@ -429,7 +428,7 @@ def test_range_compact_leaves_base_untouched(coll):
     coll.compact(upto=2, since=1)
 
     assert sorted(tuple(r) for r in coll.scan().collect()) == before
-    assert coll._seq_dirs() == [0, 2, 3]           # 1 merged into 2; 0 intact
+    assert sorted(coll.segment_stats()) == [0, 2, 3]  # 1 merged into 2; 0 intact
     # base segment never rewritten: same files, same mtimes
     assert {
         f: os.stat(os.path.join(base_dir, f)).st_mtime_ns
@@ -499,7 +498,7 @@ def test_compact_range_equivalence_query_actually_merges(spark, tmp_path, monkey
     (path, upto, since) = seen[-1]
     assert (upto, since) == (2, 1)
     merged = HadroCollection(spark, path)
-    assert merged._seq_dirs() == [0, 2], merged._seq_dirs()
+    assert sorted(merged.segment_stats()) == [0, 2], merged.segment_stats()
 
 
 def test_inflight_marker_lifecycle(coll):
@@ -536,57 +535,40 @@ def test_range_compact_truncates_below_inflight_commit(coll):
     coll.compact(upto=6, since=1)
     # truncated at 3: commits 1-3 folded, 5/6 (above the in-flight 4)
     # untouched, nothing at 4 created or deleted
-    assert coll._seq_dirs() == [0, 3, 5, 6]
+    assert sorted(coll.segment_stats()) == [0, 3, 5, 6]
     assert sorted(tuple(r) for r in coll.scan().collect()) == before
     assert coll.inflight_commits() == [4]
 
     # writer B is known dead: clear the marker and the full range folds
     coll.clear_inflight(4)
     coll.compact(upto=6, since=1)
-    assert coll._seq_dirs() == [0, 6]
+    assert sorted(coll.segment_stats()) == [0, 6]
     assert sorted(tuple(r) for r in coll.scan().collect()) == before
 
 
-def test_range_compact_blocks_on_unrecorded_disk_dir(coll):
-    """An on-disk _seq dir with neither a stats entry nor an in-flight
-    marker (pre-protocol crash remnant) must BLOCK the merge at its seq:
-    its completeness is unknowable, and folding commits on both sides of
-    it would hoist older versions above it (review finding)."""
-    import hadrodb_spark.sources.collection as C
-
+def test_range_compact_ignores_unlisted_disk_dir(spark, coll):
+    """A _seq dir no manifest entry lists (a crashed writer's remnant
+    whose marker was cleared, or a foreign dir) is not part of the
+    collection: reads never see its rows and range compaction merges
+    around it without touching it."""
     for i, k in enumerate(("a", "b", "c", "d")):
         coll.set(k, {"title": k.upper(), "n": i})
         coll.flush()                               # commits 0..3
-    # simulate the pre-r12 crash: commit 2's dir exists, but strip both
-    # its stats entry and (vacuously) any in-flight marker
-    C._cas_update_manifest(
-        coll.path, lambda m: m["segments"].pop("2", None)
-    )
-    before_dirs = coll._seq_dirs()
-    coll.compact(upto=3, since=1)
-    assert coll._seq_dirs() == before_dirs         # blocked: nothing merged
-    # clearing the ambiguity (re-recording the stats) unblocks it
-    coll._record_segment_stats(
-        2, rows=1, tombstones=0, min_key="c", max_key="c", unique_keys=True
-    )
-    coll.compact(upto=3, since=1)
-    assert coll._seq_dirs() == [0, 3]
-
-
-def test_rename_exchange_helper_swaps_or_declines(tmp_path):
-    """_rename_exchange atomically swaps two dirs where supported; on
-    success both paths still exist with exchanged contents."""
-    import hadrodb_spark.sources.collection as C
-
-    a, b = tmp_path / "a", tmp_path / "b"
-    a.mkdir(), b.mkdir()
-    (a / "fa").write_text("A")
-    (b / "fb").write_text("B")
-    if C._rename_exchange(str(a), str(b)):
-        assert (a / "fb").exists() and (b / "fa").exists()
-        assert not (a / "fa").exists() and not (b / "fb").exists()
-    else:  # unsupported here — the compact path falls back to two renames
-        assert (a / "fa").exists() and (b / "fb").exists()
+    stalled = coll._next_commit()                  # 4: writer dies mid-commit
+    remnant = os.path.join(coll._data_path, f"_seq={stalled}")
+    spark.createDataFrame(
+        [("a", 0, False, "GHOST", 9)],
+        "_key string, _sub long, _deleted boolean, title string, n int",
+    ).write.parquet(remnant)
+    coll.clear_inflight(stalled)                   # operator: writer is dead
+    before = sorted(tuple(r) for r in coll.scan().collect())
+    assert ("a", "A", 0) in before
+    assert coll.get("a")["title"] == "A"
+    coll.compact(upto=stalled, since=1)
+    assert sorted(coll.segment_stats()) == [0, 3]
+    assert sorted(tuple(r) for r in coll.scan().collect()) == before
+    assert os.listdir(remnant)                     # untouched, still unread
+    assert coll.get("a")["title"] == "A"
 
 
 def test_merge_df_noop_combination_allocates_nothing(spark, coll):
@@ -624,13 +606,14 @@ def test_failed_segment_write_cleans_marker_and_partial_dir(spark, coll, monkeyp
         coll.flush()
     monkeypatch.setattr(DataFrameWriter, "parquet", real)
     assert coll.inflight_commits() == []          # marker cleaned
-    assert coll._seq_dirs() == [0]                # no partial dir
+    assert sorted(coll.segment_stats()) == [0]
+    assert not os.path.exists(os.path.join(coll._data_path, "_seq=1"))  # no partial dir
     coll.flush()                                  # staged rows retry cleanly
     assert coll.get("b")["title"] == "B"
     # compaction over the gap still folds (burned seq blocks nothing)
     coll.set("c", {"title": "C", "n": 3})
     coll.flush()
-    coll.compact(upto=max(coll._seq_dirs()), since=1)
+    coll.compact(upto=max(coll.segment_stats()), since=1)
     assert len(coll) == 3
 
 
@@ -646,33 +629,52 @@ def test_full_rewrite_clears_all_stranded_markers(coll):
     assert coll.inflight_commits() == []
 
 
-def test_range_merge_publishes_manifest_before_swap(coll, monkeypatch):
-    """Crash-window pin for the pre-swap manifest publish (review
-    finding): if the process dies after the manifest update but before
-    any directory moves, the covered dirs are intact but UNRECORDED — so
-    every pruned/fast path disables itself (_stats_if_complete None) and
-    the scan still returns the exact LWW state.  Publishing after the
-    swap instead left pruned point-gets reading the NEW h dir with the
-    OLD h bounds/bloom."""
-    import hadrodb_spark.sources.collection as C
-
+def test_planned_scan_survives_range_compaction(coll):
+    """Snapshot isolation: a DataFrame planned before a range compaction
+    keeps reading its snapshot's files (retired, not deleted), so it
+    still returns the pre-compaction view."""
     for i, k in enumerate(("a", "b", "c", "d")):
         coll.set(k, {"title": k.upper(), "n": i})
         coll.flush()                               # commits 0..3
+    coll.set("a", {"title": "A4", "n": 4})
+    coll.delete("b")
+    coll.flush()                                   # 4
+    df = coll.scan()
+    before = sorted(tuple(r) for r in coll.scan().collect())
+    coll.compact(upto=4, since=1)
+    assert sorted(tuple(r) for r in df.collect()) == before
+    assert sorted(tuple(r) for r in coll.scan().collect()) == before
+
+
+def test_old_layout_migrates_on_open(spark, coll):
+    """A collection written before read roots existed — entries without
+    roots, and one on-disk commit with no entry at all (pre-stats) —
+    reopens with the same LWW view: one published version lists every
+    on-disk commit dir, and the unknown-stats commit is never pruned."""
+    import hadrodb_spark.sources.collection as C
+
+    coll.set("a", {"title": "A0", "n": 0})
+    coll.set("b", {"title": "B0", "n": 0})
+    coll.flush()                                   # 0
+    coll.set("a", {"title": "A1", "n": 1})
+    coll.delete("b")
+    coll.flush()                                   # 1
+    coll.set("c", {"title": "C2", "n": 2})
+    coll.flush()                                   # 2
     before = sorted(tuple(r) for r in coll.scan().collect())
 
-    def die(a, b):
-        raise RuntimeError("crash before any dir move")
+    def strip(m):
+        for s in m["segments"].values():
+            del s["roots"]
+        del m["segments"]["1"]
+        del m["listed"]
 
-    monkeypatch.setattr(C, "_rename_exchange", die)
-    with pytest.raises(RuntimeError, match="crash before"):
-        coll.compact(upto=3, since=1)
-    assert coll._seq_dirs() == [0, 1, 2, 3]        # no dir was touched
-    assert coll._stats_if_complete() is None       # pruning disabled
-    assert coll._len_fast() is None
-    assert sorted(tuple(r) for r in coll.scan().collect()) == before
-    assert coll.get("b")["title"] == "B"           # unpruned get correct
-    # documented recovery: quiesced full compact restores everything
-    coll.compact()
-    assert coll._stats_if_complete() is not None
-    assert sorted(tuple(r) for r in coll.scan().collect()) == before
+    C._cas_update_manifest(coll.path, strip)
+    old = HadroCollection(spark, coll.path)
+    assert sorted(tuple(r) for r in old.scan().collect()) == before
+    assert sorted(old.segment_stats()) == [0, 1, 2]
+    assert old.segment_stats()[1]["rows"] is None
+    assert old._candidate_seqs(["a"]) == [0, 1]
+    assert old.get("a")["title"] == "A1"
+    assert "b" not in old
+    assert len(old) == 2

@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Profile where wall time goes inside the bounded streaming rows.
 
-Wraps streamcheck._run_bounded (and the parquet-sink rows' awaitTermination)
-to capture StreamingQueryProgress durationMs breakdowns per micro-batch, so
-the optimization loop targets the component that actually costs (guide §1).
+Replaces streamcheck._run_bounded to capture StreamingQueryProgress
+durationMs breakdowns per micro-batch, so the optimization loop targets the
+component that actually costs (guide §1).  Only rows that run through
+_run_bounded are covered: the sink rows and the hadrolog and late-drop rows
+start their own queries and print no progress records.
 
 Usage: python tools/profile_stream.py [row ...]
 """
@@ -28,8 +30,6 @@ ROWS = sys.argv[1:] or [
 ]
 
 PROGRESS: list[dict] = []
-
-_orig_run = streamcheck._run_bounded
 
 
 def _patched(spark, stream_df, mode):
