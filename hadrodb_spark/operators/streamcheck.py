@@ -35,7 +35,7 @@ from hadrodb_spark.streaming.events import EVENT_SCHEMA, tumbling_counts
 
 ROWS_ONLY: tuple[str, ...] = ()
 
-_FIXTURE_VERSION = 1
+_FIXTURE_VERSION = 2  # 2: collection manifest entries list read roots
 
 
 def _utc_pinned(fn):

@@ -47,8 +47,9 @@ with the manifest version; a later range compaction deletes those more
 than ``_MANIFEST_KEEP`` versions behind the head.  Full compaction is
 quiesced by contract and deletes everything else at once, so erasure
 stays physical.  An older collection (entries without roots) migrates on
-open: one version lists every on-disk ``_seq=N`` dir — what the old
-directory-walking reader saw — and no file moves.
+open: one version lists every on-disk ``_seq=N`` dir, in flight or not —
+what the old directory-walking reader saw — and drops entries whose dir
+is gone; no file moves.
 """
 
 from __future__ import annotations
@@ -446,17 +447,13 @@ class HadroCollection:
 
     def _migrate_layout(self) -> None:
         """Old-layout migration (module docstring) of a manifest that no
-        commit of this layout marked ``listed``, or that holds an entry
-        without roots: list every on-disk ``_seq=N`` dir that is not in
-        flight; one without a stats entry gets unknown (``None``) stats,
-        which never prune."""
-
-        def old_layout(m: dict[str, Any]) -> bool:
-            segs = m["segments"].values()
-            return not m.get("listed") or any("roots" not in s for s in segs)
-
+        commit of this layout marked ``listed``: list every on-disk
+        ``_seq=N`` dir, in flight or not (the old reader read them all),
+        and clear its marker; drop entries whose dir is gone.  A dir
+        without a stats entry gets unknown (``None``) stats, which never
+        prune, and the log is no longer provably ``clean``."""
         m = self._read_manifest()
-        if not old_layout(m):
+        if m.get("listed"):
             return
         on_disk = {
             name.split("=", 1)[1]
@@ -467,13 +464,17 @@ class HadroCollection:
             return  # a new collection: its first commit marks it listed
 
         def put(m: dict[str, Any]) -> None:
-            if not old_layout(m):
+            if m.get("listed"):
                 return  # another opener migrated it first
-            listed = on_disk - set(m.get("inflight", {}))
-            for k in listed:
-                m["segments"].setdefault(k, dict.fromkeys(_STATS_FIELDS))
-            for k, s in m["segments"].items():
-                s.setdefault("roots", [self._commit_root(k)] if k in listed else [])
+            segs = m["segments"]
+            for k in set(segs) - on_disk:
+                del segs[k]
+            for k in on_disk:
+                if k not in segs:
+                    segs[k] = dict.fromkeys(_STATS_FIELDS)
+                    m["clean"] = False
+                segs[k]["roots"] = [self._commit_root(k)]
+                m.setdefault("inflight", {}).pop(k, None)
             m["listed"] = True
 
         self._update_manifest(put)
@@ -1319,18 +1320,19 @@ class HadroCollection:
             F.min(KEY_COL).alias("min_key"),
             F.max(KEY_COL).alias("max_key"),
         )
-        # h's current files, listed before the move (a dir root's listing
-        # also retires files a merge that crashed before its CAS moved in)
-        old_h = []
-        for r in snap[str(h)]["roots"]:
-            p = os.path.join(self.path, r)
-            if not os.path.isdir(p):
-                old_h.append(r)
-                continue
-            found = glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
-            old_h += [os.path.relpath(f, self.path) for f in found]
-        tmp = os.path.join(self._data_path, f".merge.{uuid.uuid4().hex}")
         h_dir = os.path.join(self._data_path, f"{SEQ_COL}={h}")
+        # every file in _seq=h/ before the move: h's own, plus any that a
+        # merge which crashed before its CAS moved in; all are retired
+        old_h = [
+            os.path.relpath(f, self.path)
+            for f in glob.glob(os.path.join(h_dir, "**", "*.parquet"), recursive=True)
+        ]
+        tmp = os.path.join(self._data_path, f".merge.{uuid.uuid4().hex}")
+        if self.partition_by:
+            # one file per partition value: every task writing every value
+            # would list tasks × values roots, and past 32 read paths
+            # Spark adds a file-listing job to each read
+            merged = merged.repartition(*self.partition_by)
         try:
             writer = merged.write.mode("overwrite")
             if self.partition_by:
@@ -1365,10 +1367,11 @@ class HadroCollection:
                 "unique_keys": True,  # the merge keeps one row per key
                 "roots": moved,
             }
+            known = {root for _, root in m.get("retired", [])}
             retire = old_h + [self._commit_root(n) for n in covered[:-1]]
             m["retired"] = [
                 r for r in m.get("retired", []) if r not in reclaim
-            ] + [[m["version"], r] for r in retire]
+            ] + [[m["version"], r] for r in retire if r not in known]
 
         try:
             self._update_manifest(put)

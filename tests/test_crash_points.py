@@ -10,7 +10,8 @@ mutates nothing more, and no cleanup handler runs.  So one run of
 ``flush``, a range ``compact`` and a full ``compact`` copies the
 collection at every point, and each copy is the state a crash there
 leaves.  Each is reopened: its LWW view must equal the model's state
-before or after the operation, and a following write and get must
+before or after the operation, a point get of every key and ``len``
+must agree with that view, and a following write and get must
 succeed.  Those checks read only the head snapshot — the head manifest
 and the files its roots resolve to — so a copy whose head snapshot was
 already checked is not checked again.
@@ -184,6 +185,17 @@ def test_crash_at_every_point_leaves_pre_or_post_state(
         crashed = HadroCollection(spark, state)
         got = _view(crashed)
         assert got in (pre, post), (op, k, got)
+        # point gets read only their candidates' roots and len() trusts
+        # the stats: both must agree with the full scan ("c" is a
+        # tombstone from the template, "zz" was never written)
+        for key in sorted({*pre, *post, "c", "zz"}):
+            if key in got:
+                want = {"title": got[key][0], "n": got[key][1]}
+                assert crashed.get(key) == want, (op, k, key)
+            else:
+                with pytest.raises(KeyError):
+                    crashed.get(key)
+        assert len(crashed) == len(got), (op, k)
         crashed.set("z", {"title": "Z", "n": k})
         assert crashed.get("z") == {"title": "Z", "n": k}
     # each op changes the head snapshot at least twice before it ends

@@ -678,3 +678,72 @@ def test_old_layout_migrates_on_open(spark, coll):
     assert old.get("a")["title"] == "A1"
     assert "b" not in old
     assert len(old) == 2
+
+
+def test_old_layout_stranded_full_rewrite_migrates(spark, coll):
+    """The old full rewrite renamed its output into place, one in-flight
+    ``_seq=c`` dir holding the whole live view, before it published: a
+    crash there left that dir next to a manifest of entries whose dirs
+    were gone.  The old reader walked the directory and saw the live view;
+    migration lists the in-flight dir, clears its marker and drops the
+    dirless entries, so reads, point gets and ``len`` agree with it."""
+    import shutil
+
+    import hadrodb_spark.sources.collection as C
+
+    coll.set("a", {"title": "A0", "n": 0})
+    coll.set("b", {"title": "B0", "n": 0})
+    coll.flush()                                   # 0
+    coll.set("a", {"title": "A1", "n": 1})
+    coll.delete("b")
+    coll.set("c", {"title": "C1", "n": 1})
+    coll.flush()                                   # 1
+    before = sorted(tuple(r) for r in coll.scan().collect())
+    live = coll._lww().filter(~F.col("_deleted")).drop("_seq")
+    c = coll._next_commit()                        # 2: in flight
+    live.write.parquet(os.path.join(coll._data_path, f"_seq={c}"))
+    for n in (0, 1):
+        shutil.rmtree(os.path.join(coll._data_path, f"_seq={n}"))
+
+    def strip(m):
+        for s in m["segments"].values():
+            del s["roots"]
+        del m["listed"]
+
+    C._cas_update_manifest(coll.path, strip)
+    old = HadroCollection(spark, coll.path)
+    assert sorted(old.segment_stats()) == [c]
+    assert old.inflight_commits() == []
+    assert sorted(tuple(r) for r in old.scan().collect()) == before
+    assert old.get("a")["title"] == "A1"
+    assert old.get("c")["title"] == "C1"
+    assert "b" not in old
+    assert len(old) == 2
+    old.compact(upto=c + 5, since=0)               # nothing to merge
+    old.set("d", {"title": "D", "n": 3})
+    old.flush()
+    old.compact(upto=c + 5, since=0)               # merges c with the new commit
+    assert sorted(tuple(r) for r in old.scan().collect()) == sorted(
+        before + [("d", "D", 3)]
+    )
+
+
+def test_range_merge_retires_leftovers_under_file_roots(coll):
+    """When h already lists merged files, any other file in ``_seq=h/`` (a
+    merge that crashed after its move) is never read, and the next merge
+    into h retires it; a root is never retired twice."""
+    for i, k in enumerate(("a", "b", "c", "d")):
+        coll.set(k, {"title": k.upper(), "n": i})
+        coll.flush()                               # commits 0..3
+    coll.compact(upto=3, since=2)                  # h=3 lists files
+    stray = os.path.join(coll._data_path, "_seq=3", "part-stray.parquet")
+    with open(stray, "wb"):
+        pass
+    before = sorted(tuple(r) for r in coll.scan().collect())
+    assert len(before) == 4
+    coll.compact(upto=3, since=1)                  # into h=3 again
+    assert sorted(coll.segment_stats()) == [0, 3]
+    assert sorted(tuple(r) for r in coll.scan().collect()) == before
+    retired = [r for _, r in coll._read_manifest()["retired"]]
+    assert os.path.relpath(stray, coll.path) in retired
+    assert len(retired) == len(set(retired))
