@@ -22,6 +22,7 @@ the result a closed-form batch relation.
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
 import shutil
 import tempfile
@@ -35,7 +36,9 @@ from hadrodb_spark.streaming.events import EVENT_SCHEMA, tumbling_counts
 
 ROWS_ONLY: tuple[str, ...] = ()
 
-_FIXTURE_VERSION = 2  # 2: collection manifest entries list read roots
+_SOURCES_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sources"
+)
 
 
 def _utc_pinned(fn):
@@ -170,8 +173,6 @@ def _stream_events_dir(sf_dir: str) -> str:
     """Fixture cache dir, fingerprinted like nativefmt._native_events_dir
     (absolute path + size + mtime of the source events table) so a
     regenerated dataset never reuses stale stream files."""
-    import hashlib
-
     src = os.path.join(os.path.realpath(sf_dir), "events.parquet")
     try:
         st = os.stat(src)
@@ -179,9 +180,17 @@ def _stream_events_dir(sf_dir: str) -> str:
     except OSError:
         ident = src
     tag = hashlib.sha256(ident.encode()).hexdigest()[:16]
-    return os.path.join(
-        scratch_dir(), f"stream_events_{_FIXTURE_VERSION}_{tag}"
-    )
+    return os.path.join(scratch_dir(), f"stream_events_{tag}")
+
+
+def _built_by(sf_dir: str, kind: str, module: str) -> str:
+    """Cache dir of a fixture written through ``sources/<module>.py``:
+    the ``_stream_events_dir`` key plus a hash of that module's source,
+    so a cache written by other code (another checkout, an older
+    format) is never read."""
+    with open(os.path.join(_SOURCES_DIR, f"{module}.py"), "rb") as f:
+        code = hashlib.sha256(f.read()).hexdigest()[:16]
+    return f"{_stream_events_dir(sf_dir)}_{kind}_{code}"
 
 
 def _build_stream_fixture(spark: SparkSession, sf_dir: str, dest: str) -> None:
@@ -629,7 +638,7 @@ def stream_sink_collection_equivalence(
     source → state → sink.)"""
     from hadrodb_spark.sources.collection import HadroCollection
 
-    fixture = _stream_events_dir(sf_dir) + "_sink"
+    fixture = _built_by(sf_dir, "sink", "collection")
     if not os.path.isdir(fixture):
         _build_sink_collection(spark, sf_dir, fixture)
     coll = HadroCollection(spark, os.path.join(fixture, "coll"))
@@ -773,7 +782,7 @@ def stream_hadrolog_source_equivalence(
     from hadrodb_spark.sources import hadrolog
 
     hadrolog.register(spark)
-    cache = _stream_events_dir(sf_dir) + "_native"
+    cache = _built_by(sf_dir, "native", "hadrolog")
     if not os.path.isdir(cache):
         _build_fixture(
             cache, lambda staging: _write_native_wave(spark, sf_dir, staging, 1)
@@ -786,7 +795,7 @@ def stream_hadrolog_source_equivalence(
     # The cache is built THROUGH the same writer once; per invocation the
     # segments hardlink into the work dir only after run 1, so the
     # mid-stream-append arrival order this row certifies is unchanged.
-    cache_w2 = _stream_events_dir(sf_dir) + "_native_w2"
+    cache_w2 = _built_by(sf_dir, "native_w2", "hadrolog")
     if not os.path.isdir(cache_w2):
 
         def _build_w2(staging: str) -> None:

@@ -35,21 +35,33 @@ but ignores — ``hadro/engine.py:139``; Spark honors both for free).
 
 Storage layout — manifest-listed snapshots (Bitcask hint files, Delta's
 log): the manifest head alone defines the collection.  Each commit's entry
-lists its read roots, relative to the collection dir: an ordinary commit's
-own ``segments/_seq=N`` dir (exactly one write produces it), or for a
-range-compacted entry ``h`` its merged files, moved into ``_seq=h/`` under
-new names.  A read hands the head's roots (a point get: its candidates')
-to one ``spark.read.parquet`` with ``basePath`` = ``segments``, so ``_seq``
+lists its read roots, relative to the collection dir: an ordinary
+commit's own ``segments/_seq=N`` dir, or for a range-compacted entry
+``h`` its merged files, moved into ``_seq=h/`` under new names.  A read
+hands the head's roots (a point get: its candidates') to one
+``spark.read.parquet`` with ``basePath`` = ``segments``, so ``_seq``
 still comes from the path; unpublished or crashed writes are never listed,
 and a planned DataFrame keeps its files while compaction runs.  Range
 compaction's CAS moves the covered roots to a ``retired`` list stamped
 with the manifest version; a later range compaction deletes those more
 than ``_MANIFEST_KEEP`` versions behind the head.  Full compaction is
 quiesced by contract and deletes everything else at once, so erasure
-stays physical.  An older collection (entries without roots) migrates on
-open: one version lists every on-disk ``_seq=N`` dir, in flight or not —
-what the old directory-walking reader saw — and drops entries whose dir
-is gone; no file moves.
+stays physical.  An older collection (no ``listed`` mark) migrates on
+open: one version lists every on-disk ``_seq=N`` dir — what the old
+directory-walking reader saw — and drops entries whose dir is gone; no
+file moves.
+
+Commits — ``_seq`` is assigned at publish, like a Bitcask record's
+offset: a commit writes its Parquet output into a private
+``segments/.w.<uuid>`` dir, claims ``segments/_seq=n`` at the head's
+commit counter ``n`` (taking ``n+1`` while that name exists), moves the
+output there, and publishes through ONE manifest CAS that sets the
+counter to ``n+1`` and lists the entry.  If another commit was published
+first the counter is past ``n``: the still-unlisted dir moves to the new
+counter and the publish retries.  So ``_seq`` order is publish order,
+and no seq is held by a writer that has not published.  A crashed writer
+leaves only an unlisted ``.w.<uuid>`` or ``_seq=N`` dir, which the next
+full compaction reclaims.
 """
 
 from __future__ import annotations
@@ -72,10 +84,9 @@ from pyspark.sql import types as T
 from hadrodb_spark.config import WRITE_CONSISTENCY, WriteConsistency
 
 KEY_COL = "_key"
-SEQ_COL = "_seq"      # commit counter (monotonic, single-writer)
+SEQ_COL = "_seq"      # commit position, assigned at publish
 SUB_COL = "_sub"      # intra-commit row index (breaks ties within a commit)
 DELETED_COL = "_deleted"
-INTERNAL_COLS = (KEY_COL, SEQ_COL, SUB_COL, DELETED_COL)
 
 _SCHEMA_FILE = "_hadro_schema.json"
 _MANIFEST_FILE = "_hadro_manifest.json"  # legacy head (pre-r9, read-only)
@@ -90,7 +101,8 @@ class HadroError(Exception):
 
 
 class _Superseded(Exception):
-    """A range compaction's covered entries changed before its CAS."""
+    """The head moved under a CAS mutate: a range compaction's covered
+    entries changed, or another commit took a publisher's ``_seq``."""
 
 
 # --- manifest commit protocol (cross-host safe) ---------------------------
@@ -446,26 +458,24 @@ class HadroCollection:
         self._migrate_layout()
 
     def _migrate_layout(self) -> None:
-        """Old-layout migration (module docstring) of a manifest that no
-        commit of this layout marked ``listed``: list every on-disk
-        ``_seq=N`` dir, in flight or not (the old reader read them all),
-        and clear its marker; drop entries whose dir is gone.  A dir
-        without a stats entry gets unknown (``None``) stats, which never
-        prune, and the log is no longer provably ``clean``."""
-        m = self._read_manifest()
-        if m.get("listed"):
+        """Publish the ``listed`` mark: at once for a new collection, so a
+        crashed first writer's unlisted ``_seq=0`` is never taken for old
+        layout; for an old-layout one (module docstring), list every
+        on-disk ``_seq=N`` dir (the old reader read them all), drop
+        entries whose dir is gone and the legacy ``inflight`` markers.  A
+        dir without a stats entry gets unknown (``None``) stats, which
+        never prune, and the log is no longer provably ``clean``."""
+        if self._read_manifest().get("listed"):
             return
         on_disk = {
             name.split("=", 1)[1]
             for name in os.listdir(self._data_path)
             if name.startswith(SEQ_COL + "=") and name.split("=", 1)[1].isdigit()
         }
-        if not on_disk and not m["segments"]:
-            return  # a new collection: its first commit marks it listed
 
         def put(m: dict[str, Any]) -> None:
             if m.get("listed"):
-                return  # another opener migrated it first
+                return  # another opener published it first
             segs = m["segments"]
             for k in set(segs) - on_disk:
                 del segs[k]
@@ -474,7 +484,7 @@ class HadroCollection:
                     segs[k] = dict.fromkeys(_STATS_FIELDS)
                     m["clean"] = False
                 segs[k]["roots"] = [self._commit_root(k)]
-                m.setdefault("inflight", {}).pop(k, None)
+            m.pop("inflight", None)
             m["listed"] = True
 
         self._update_manifest(put)
@@ -595,8 +605,8 @@ class HadroCollection:
 
     def _update_manifest(self, mutate) -> dict[str, Any]:
         """Conditional-put commit (see the module-level protocol note):
-        every manifest mutation — commit-counter bump, segment stats,
-        compaction reset — publishes ``manifest.v{N+1}`` via
+        every manifest mutation — a commit's publish, a range merge's
+        swap, migration — publishes ``manifest.v{N+1}`` via
         create-exclusive link and retries on collision.  This replaces
         the pre-r9 advisory ``flock`` as the correctness boundary, so two
         DRIVERS ON DIFFERENT HOSTS over shared storage serialize exactly
@@ -605,63 +615,112 @@ class HadroCollection:
         to any number of processes on any number of machines)."""
         return _cas_update_manifest(self.path, mutate)
 
-    def _next_commit(self) -> int:
-        """Monotonic commit counter: two concurrent writers get distinct
-        ``_seq`` values or fail loudly, never silently collide. Parquet
-        part-files have unique names, so the data appends themselves never
-        clobber each other."""
-        holder: dict[str, int] = {}
+    def _commit(
+        self,
+        df: DataFrame,
+        unique_keys: bool | None,
+        stats: dict[str, Any] | None = None,
+        reset: bool = False,
+    ) -> int:
+        """Write ``df`` and publish it as one commit; returns its ``_seq``.
+        The entry records row and tombstone counts, key bounds and whether
+        keys are known-unique within the commit — ``stats`` when the
+        caller has them exactly (``flush``, with a key bloom), else
+        observed on the write itself (no second scan).  This is the
+        Iceberg/Delta manifest idea scaled down to a Bitcask log: at 100 TB
+        the expensive part of a point lookup is *finding which files could
+        hold the key*, and the stats answer that on the driver without
+        listing or opening any segment.  ``reset`` publishes the commit as
+        the whole collection."""
+        if stats is None:
+            obs = Observation()
+            df = df.observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.col(DELETED_COL).cast("long")).alias("tombstones"),
+                F.min(KEY_COL).alias("min_key"),
+                F.max(KEY_COL).alias("max_key"),
+            )
+        tmp = self._write(df)
+        if stats is None:
+            got = obs.get
+            stats = {
+                "rows": int(got["rows"]),
+                "tombstones": int(got["tombstones"] or 0),
+                "min_key": got["min_key"],
+                "max_key": got["max_key"],
+            }
+        return self._publish(tmp, dict(stats, unique_keys=unique_keys), reset)
 
-        def bump(m: dict[str, Any]) -> None:
-            holder["commit"] = int(m["commits"])
-            m["commits"] = holder["commit"] + 1
-            # IN-FLIGHT marker (r12): allocated but not yet recorded —
-            # cleared by _record_segment_stats (or a full rewrite) once
-            # the segment write completes.  Range compaction reads
-            # this to avoid folding (or hoisting rows over) another
-            # writer's incomplete commit; see compact().
-            m.setdefault("inflight", {})[str(holder["commit"])] = True
-            m["listed"] = True  # every entry this code records has roots
+    def _write(self, df: DataFrame) -> str:
+        """One Parquet write (then any user ``partition_by`` dirs below)
+        into a private ``segments/.w.<uuid>`` dir, returned for
+        ``_publish``; a failed write removes its partial dir.  Once
+        published as ``segments/_seq=N/``, stats-pruned point gets read
+        only their candidates' dirs, and time-travel (``_seq <= c``) and
+        partition-key predicates prune whole directories (PartitionFilters)
+        before a single footer is opened — the scale path for
+        time/tenant-keyed logs.
 
-        self._update_manifest(bump)
-        return holder["commit"]
+        The commit value is the DIRECTORY name, not a ``partitionBy(_seq)``
+        column: a dynamic-partition write would insert a sort on the
+        (constant!) partition key across every task — measured ~25% of
+        bulk-append wall time for zero benefit."""
+        tmp = os.path.join(self._data_path, f".w.{uuid.uuid4().hex}")
+        writer = df.write
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        try:
+            writer.parquet(tmp)
+        except Exception:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return tmp
+
+    def _publish(self, tmp: str, entry: dict[str, Any], reset: bool) -> int:
+        """Give the written dir ``tmp`` its ``_seq`` and list it (module
+        docstring, "Commits").  The claim is an exclusive ``mkdir`` of
+        ``_seq=n``: an existing dir (a crashed writer's remnant, or a
+        racing writer's claim) is never listed under that name by anyone
+        else, so take the next.  ``os.rename`` alone would not do, as it
+        replaces an EMPTY dir, such as a zero-row write's.  The CAS check
+        is the synchronisation: a mutate that finds the counter past
+        ``n`` re-sequences instead of publishing below it."""
+        n = int(self._read_manifest()["commits"])
+        while True:
+            while True:
+                claim = os.path.join(self._data_path, f"{SEQ_COL}={n}")
+                try:
+                    os.mkdir(claim)
+                    break
+                except FileExistsError:
+                    n += 1
+            os.rename(tmp, claim)
+            tmp = claim
+
+            def put(m: dict[str, Any]) -> None:
+                if m["commits"] > n:
+                    raise _Superseded(m["commits"])
+                m["commits"] = n + 1
+                listed = dict(entry, roots=[self._commit_root(n)])
+                if reset:
+                    # the log IS the live view now: one commit, no
+                    # tombstones, unique keys — ``clean``, so reads skip
+                    # the LWW merge until the next write
+                    m["segments"] = {str(n): listed}
+                    m["clean"] = True
+                    m["retired"] = []
+                else:
+                    m["segments"][str(n)] = listed
+                    m["clean"] = False  # any append may shadow existing keys
+
+            try:
+                self._update_manifest(put)
+                return n
+            except _Superseded as moved:
+                n = int(moved.args[0])
 
     # ------------------------------------------------------------ segment stats
-    def _record_segment_stats(
-        self,
-        commit: int,
-        rows: int,
-        tombstones: int,
-        min_key: str | None,
-        max_key: str | None,
-        unique_keys: bool | None,
-        key_bloom: str | None = None,
-    ) -> None:
-        """Publish a commit: its manifest entry holds the read root
-        (``segments/_seq=N/``) plus row count, tombstone count, key
-        bounds, an optional key bloom filter, and whether keys are
-        known-unique within the commit.
-
-        This is the Iceberg/Delta manifest idea scaled down to a Bitcask
-        log: at 100 TB the expensive part of a point lookup is not reading
-        data, it's *finding which files could hold the key* — these bounds
-        answer that on the driver without listing or opening any segment."""
-
-        def put(m: dict[str, Any]) -> None:
-            m["segments"][str(commit)] = {
-                "rows": int(rows),
-                "tombstones": int(tombstones),
-                "min_key": min_key,
-                "max_key": max_key,
-                "unique_keys": unique_keys,
-                "key_bloom": key_bloom,
-                "roots": [self._commit_root(commit)],
-            }
-            m["clean"] = False  # any append may shadow existing keys
-            m.setdefault("inflight", {}).pop(str(commit), None)
-
-        self._update_manifest(put)
-
     def segment_stats(self) -> dict[int, dict[str, Any]]:
         """Per-commit manifest statistics (public introspection surface),
         keyed by commit id; the layout (read roots) is left out."""
@@ -670,25 +729,6 @@ class HadroCollection:
             int(k): {f: v for f, v in s.items() if f != "roots"}
             for k, s in segs.items()
         }
-
-    def inflight_commits(self) -> list[int]:
-        """Commits allocated but not yet recorded (another writer mid-
-        commit, or a crashed writer's stranded marker).  Range/incremental
-        compaction will not merge at or above the lowest of these."""
-        return sorted(
-            int(k) for k in self._read_manifest().get("inflight", {})
-        )
-
-    def clear_inflight(self, commit: int) -> None:
-        """OPERATOR ESCAPE HATCH: drop a crashed writer's stranded
-        in-flight marker so maintenance can proceed.  Only safe once the
-        owning writer is known dead — clearing a LIVE writer's marker
-        re-opens the lost-update race ``compact`` guards against."""
-
-        def drop(m: dict[str, Any]) -> None:
-            m.setdefault("inflight", {}).pop(str(commit), None)
-
-        self._update_manifest(drop)
 
     def _candidate_seqs(
         self, keys: Sequence[str], segs: dict[str, Any] | None = None
@@ -781,27 +821,31 @@ class HadroCollection:
         batch; AGGRESSIVE flushes per staged record)."""
         if not self._pending:
             return
-        commit = self._next_commit()
         rows = [
-            (key, commit, idx, deleted, *[vals[f.name] for f in self.schema.fields])
+            (key, idx, deleted, *[vals[f.name] for f in self.schema.fields])
             for idx, (key, vals, deleted) in enumerate(self._pending)
         ]
-        df = self.spark.createDataFrame(rows, self._full_schema)
-        self._write_segments(df, commit)
+        # one slice: a few staged rows spread over defaultParallelism
+        # slices would cost a task and a (maybe empty) part file each
+        df = self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize(rows, 1),
+            T.StructType([f for f in self._full_schema if f.name != SEQ_COL]),
+        )
         # stats are exact and free here — the batch is driver-resident
         keys = [key for key, _, _ in self._pending]
-        self._record_segment_stats(
-            commit,
-            rows=len(rows),
-            tombstones=sum(1 for _, _, d in self._pending if d),
-            min_key=min(keys),
-            max_key=max(keys),
+        self._commit(
+            df,
             unique_keys=len(set(keys)) == len(keys),
-            key_bloom=_bloom_build(keys),
+            stats={
+                "rows": len(rows),
+                "tombstones": sum(1 for _, _, d in self._pending if d),
+                "min_key": min(keys),
+                "max_key": max(keys),
+                "key_bloom": _bloom_build(keys),
+            },
         )
-        # only forget staged records once they are durably on disk — a failed
-        # segment write leaves them staged and the flush retryable (the gap
-        # in the commit counter is harmless)
+        # only forget staged records once they are durably on disk — a
+        # failed write leaves them staged and the flush retryable
         self._pending.clear()
 
     def append(self, record: Mapping[str, Any] | Sequence[Any], key: str | None = None) -> str:
@@ -817,13 +861,11 @@ class HadroCollection:
         driver-side row buffering). ``key_col`` names the column to use as
         the record key; otherwise keys are generated."""
         self.flush()
-        commit = self._next_commit()
         if key_col is not None:
             keyed = df.withColumn(KEY_COL, F.col(key_col).cast("string"))
         else:
             keyed = df.withColumn(KEY_COL, F.expr("uuid()"))
         out = (
-            keyed.withColumn(SEQ_COL, F.lit(commit).cast("long"))
             # intra-commit tiebreak, only relevant for duplicate keys inside
             # ONE bulk commit: a DataFrame carries no row order, so the
             # winner is defined as the row with the greatest content hash —
@@ -831,65 +873,16 @@ class HadroCollection:
             # monotonically_increasing_id, whose partition→id mapping can
             # shift on re-run) and map-only (a row_number window would cost
             # a full shuffle on every bulk append)
-            .withColumn(
+            keyed.withColumn(
                 SUB_COL,
                 F.xxhash64(*[F.col(f.name) for f in self.schema.fields]),
             )
             .withColumn(DELETED_COL, F.lit(False))
-            .select(*INTERNAL_COLS, *[f.name for f in self.schema.fields])
+            .select(KEY_COL, SUB_COL, DELETED_COL, *[f.name for f in self.schema.fields])
         )
-        # piggyback stats on the write action itself (observe = no 2nd scan)
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
-        )
-        self._write_segments(out, commit)
-        got = obs.get
-        self._record_segment_stats(
-            commit,
-            rows=got["rows"],
-            tombstones=0,
-            min_key=got["min_key"],
-            max_key=got["max_key"],
-            # generated uuids are unique; caller-supplied keys may collide
-            # within the commit, and proving otherwise would cost a shuffle
-            unique_keys=True if key_col is None else None,
-        )
-
-    def _write_segments(self, df: DataFrame, commit: int) -> None:
-        """One Parquet write into the commit's own hive dir
-        (``segments/_seq=N/``, then any user ``partition_by`` dirs below),
-        invisible until ``_record_segment_stats`` lists it: stats-pruned
-        point gets read only their candidates' dirs, and time-travel
-        (``_seq <= c``) and partition-key predicates prune whole
-        directories (PartitionFilters) before a single footer is opened —
-        the scale path for time/tenant-keyed logs.
-
-        The commit value is written as the DIRECTORY, not via
-        ``partitionBy(_seq)``: a dynamic-partition write would insert a
-        sort on the (constant!) partition key across every task — measured
-        ~25% of bulk-append wall time for zero benefit."""
-        writer = df.drop(SEQ_COL).write.mode("append")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        target = os.path.join(self._data_path, f"{SEQ_COL}={commit}")
-        try:
-            writer.parquet(target)
-        except Exception:
-            # Transient write failure (executor loss, disk full) in a
-            # SURVIVING process: drop the unlisted partial dir and this
-            # commit's in-flight marker (a stranded marker blocks range
-            # compaction at this seq until cleared).  If the cleanup
-            # itself fails, the stranded marker IS the fail-safe.
-            try:
-                shutil.rmtree(target, ignore_errors=True)
-                self.clear_inflight(commit)
-            except Exception:
-                pass
-            raise
+        # generated uuids are unique; caller-supplied keys may collide
+        # within the commit, and proving otherwise would cost a shuffle
+        self._commit(out, unique_keys=True if key_col is None else None)
 
     # --------------------------------------------------------------- KV writes
     def set(self, key: str, record: Mapping[str, Any] | Sequence[Any]) -> None:
@@ -919,30 +912,16 @@ class HadroCollection:
             .filter(cond)
             .select(KEY_COL)
         )
-        commit = self._next_commit()
-        out = keys.select(
+        # keys come from the LWW view: one row per key
+        self._commit(self._tombstones(keys), unique_keys=True)
+
+    def _tombstones(self, keys: DataFrame) -> DataFrame:
+        """A tombstone row for each row of the ``_key``-only ``keys``."""
+        return keys.select(
             F.col(KEY_COL),
-            F.lit(commit).cast("long").alias(SEQ_COL),
             F.lit(0).cast("long").alias(SUB_COL),
             F.lit(True).alias(DELETED_COL),
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema.fields],
-        )
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
-        )
-        self._write_segments(out, commit)
-        got = obs.get
-        self._record_segment_stats(
-            commit,
-            rows=got["rows"],
-            tombstones=got["rows"],
-            min_key=got["min_key"],
-            max_key=got["max_key"],
-            unique_keys=True,  # keys come from the LWW view: one row per key
         )
 
     def merge_df(
@@ -968,21 +947,15 @@ class HadroCollection:
         if when_matched not in ("update", "delete", "ignore"):
             raise HadroError(f"unknown when_matched mode: {when_matched!r}")
         if when_matched == "ignore" and not insert_unmatched:
-            # the one combination with nothing to write — return BEFORE
-            # allocating a commit, or the never-recorded allocation would
-            # strand an in-flight marker that blocks range compaction at
-            # that seq forever (review finding)
-            return
+            return  # the one combination with nothing to write
         self.flush()
         keyed = df.withColumn(KEY_COL, F.col(key_col).cast("string"))
         live = self._lww().filter(~F.col(DELETED_COL)).select(KEY_COL)
-        commit = self._next_commit()
         user = [f.name for f in self.schema.fields]
 
         def versions(rows: DataFrame) -> DataFrame:
             return rows.select(
                 F.col(KEY_COL),
-                F.lit(commit).cast("long").alias(SEQ_COL),
                 F.xxhash64(*[F.col(c) for c in user]).alias(SUB_COL),
                 F.lit(False).alias(DELETED_COL),
                 *user,
@@ -993,39 +966,14 @@ class HadroCollection:
             parts.append(versions(keyed.join(live, KEY_COL, "left_semi")))
         elif when_matched == "delete":
             parts.append(
-                keyed.join(live, KEY_COL, "left_semi").select(
-                    F.col(KEY_COL),
-                    F.lit(commit).cast("long").alias(SEQ_COL),
-                    F.lit(0).cast("long").alias(SUB_COL),
-                    F.lit(True).alias(DELETED_COL),
-                    *[F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema.fields],
-                )
+                self._tombstones(keyed.join(live, KEY_COL, "left_semi").select(KEY_COL))
             )
         if insert_unmatched:
             parts.append(versions(keyed.join(live, KEY_COL, "left_anti")))
-        if not parts:  # unreachable — guarded before allocation above
-            return
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col(DELETED_COL).cast("long")).alias("tombstones"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
-        )
-        self._write_segments(out, commit)
-        got = obs.get
-        self._record_segment_stats(
-            commit,
-            rows=got["rows"],
-            tombstones=int(got["tombstones"] or 0),
-            min_key=got["min_key"],
-            max_key=got["max_key"],
-            unique_keys=None,  # source may carry duplicate keys
-        )
+        self._commit(out, unique_keys=None)  # source may carry duplicate keys
 
     def diff(self, commit_a: int, commit_b: int) -> DataFrame:
         """Key-level changes between two snapshots: ``(key, change)`` with
@@ -1280,10 +1228,11 @@ class HadroCollection:
         - tombstones whose key has no newer version are PRESERVED (not
           purged — only a full compact may purge), so no shadowed
           pre-range row can resurface;
-        - the range is truncated strictly below any IN-FLIGHT commit
-          (allocated, not yet recorded — see ``_next_commit``), so a
-          concurrent writer's commit is never shadowed by rows hoisted
-          from below it to ``h``.
+        - a commit published after the merge read the head takes its
+          ``_seq`` at publish (module docstring, "Commits"), above every
+          listed entry and so above ``h``: rows hoisted to ``h`` never
+          shadow it, and no seq inside the range is held by a writer
+          that has not published.
 
         One manifest CAS swaps the covered entries for ``h`` and retires
         their roots (module docstring), or drops the merge if another
@@ -1300,11 +1249,7 @@ class HadroCollection:
             return
         self.flush()
         head, man = _manifest_head(self.path)
-        blockers = [
-            i for i in map(int, man.get("inflight", {})) if since <= i <= upto
-        ]
-        h_cap = min(blockers) - 1 if blockers else upto
-        covered = sorted(n for n in map(int, man["segments"]) if since <= n <= h_cap)
+        covered = sorted(n for n in map(int, man["segments"]) if since <= n <= upto)
         if len(covered) < 2:
             return  # nothing to merge
         h = covered[-1]
@@ -1632,7 +1577,6 @@ class HadroCollection:
         under ``segments/``.  A crash before the publish leaves the old
         snapshot live and the new dir unlisted; after it, the leftovers
         are unlisted and the next full rewrite deletes them."""
-        commit = self._next_commit()
         out = df.drop(SEQ_COL)
         if partition_col:
             # deterministic placement: partition_col holds representative
@@ -1658,36 +1602,7 @@ class HadroCollection:
                 out = out.repartitionByRange(*[F.col(c) for c in sort_cols])
             out = out.sortWithinPartitions(*self.partition_by, *sort_cols)
         out = out.drop(_ZORDER_COL)  # transient clustering key, if any
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.min(KEY_COL).alias("min_key"),
-            F.max(KEY_COL).alias("max_key"),
-        )
-        self._write_segments(out, commit)
-        got = obs.get
-
-        def put(m: dict[str, Any]) -> None:
-            # the log IS the live view now: one commit, no tombstones,
-            # unique keys — ``clean``, so reads skip the LWW merge until
-            # the next write.  A full rewrite runs quiesced by contract,
-            # so any in-flight marker is stranded: self-heal the lot
-            m["segments"] = {
-                str(commit): {
-                    "rows": int(got["rows"]),
-                    "tombstones": 0,
-                    "min_key": got["min_key"],
-                    "max_key": got["max_key"],
-                    "unique_keys": True,
-                    "roots": [self._commit_root(commit)],
-                }
-            }
-            m["clean"] = True
-            m["inflight"] = {}
-            m["retired"] = []
-
-        self._update_manifest(put)
+        commit = self._commit(out, unique_keys=True, reset=True)
         keep = f"{SEQ_COL}={commit}"
         for name in os.listdir(self._data_path):
             if name != keep:

@@ -371,15 +371,15 @@ def test_flush_retryable_after_write_failure(spark, tmp_path, monkeypatch):
     c = HadroCollection(spark, str(tmp_path / "retry"), BOOKS)
     c._pending.append(("k", {"title": "t", "author": None}, False))
     boom = {"n": 0}
-    orig = HadroCollection._write_segments
+    orig = HadroCollection._write
 
-    def failing(self, df, commit):
+    def failing(self, df):
         if boom["n"] == 0:
             boom["n"] += 1
             raise OSError("disk full")
-        return orig(self, df, commit)
+        return orig(self, df)
 
-    monkeypatch.setattr(HadroCollection, "_write_segments", failing)
+    monkeypatch.setattr(HadroCollection, "_write", failing)
     with pytest.raises(OSError):
         c.flush()
     assert len(c._pending) == 1

@@ -198,7 +198,10 @@ def test_crash_at_every_point_leaves_pre_or_post_state(
         assert len(crashed) == len(got), (op, k)
         crashed.set("z", {"title": "Z", "n": k})
         assert crashed.get("z") == {"title": "Z", "n": k}
-    # each op changes the head snapshot at least twice before it ends
-    # (allocation or moved files, then the commit)
     assert len(rec.states) > 5, (op, len(rec.states))
-    assert len(checked) >= 3, (op, len(checked))
+    # a commit publishes once, so the head moves from pre to post in one
+    # step; a range merge also moves files into _seq=h/ before its CAS
+    if op == "range_compact":
+        assert len(checked) >= 3, (op, len(checked))
+    else:
+        assert len(checked) == 2, (op, len(checked))

@@ -389,8 +389,9 @@ def test_concurrent_writer_fault_drill_small():
     """The envelope fault drill (tools/fault_drill_concurrent_writers.py)
     at fixture scale: two real driver PROCESSES (three JVMs total) race
     merge_df commits on one collection; the rendezvous FORCES a manifest
-    CAS loss; the drill asserts clean retry, empty in-flight set,
-    stats/dirs consistency, and batch-LWW equivalence.  The sf1 run is
+    CAS loss on writer A's publish, which re-sequences A's commit; the
+    drill asserts clean retry, every on-disk ``_seq`` dir listed and no
+    write dir left, stats/dirs consistency, and batch-LWW equivalence.  The sf1 run is
     recorded per round in SCALE.md — this keeps the harness itself from
     rotting."""
     import subprocess
@@ -416,4 +417,5 @@ def test_concurrent_writer_fault_drill_small():
         [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
     )
     assert report["cas_losses"] >= 1
+    assert report["resequenced"] >= 1
     assert report["lww_equivalent"] is True

@@ -501,96 +501,149 @@ def test_compact_range_equivalence_query_actually_merges(spark, tmp_path, monkey
     assert sorted(merged.segment_stats()) == [0, 2], merged.segment_stats()
 
 
-def test_inflight_marker_lifecycle(coll):
-    """_next_commit marks the seq in-flight; _record_segment_stats clears
-    it — the manifest-level handshake range compaction keys off."""
-    coll.set("a", {"title": "A", "n": 1})
-    coll.flush()
-    assert coll.inflight_commits() == []          # recorded ⇒ cleared
-    seq = coll._next_commit()                      # allocate, don't write
-    assert coll.inflight_commits() == [seq]
-    coll._record_segment_stats(
-        seq, rows=0, tombstones=0, min_key=None, max_key=None,
-        unique_keys=True,
-    )
-    assert coll.inflight_commits() == []
-
-
-def test_range_compact_truncates_below_inflight_commit(coll):
-    """A concurrent writer's in-flight commit must bound the merge: folding
-    across it would either read a partial segment or hoist an older
-    version above the in-flight seq, shadowing that writer's final rows.
-    The merge truncates strictly below it; clear_inflight unblocks."""
+def test_late_publisher_takes_seq_above_range_merge(spark, coll):
+    """``_seq`` is assigned at publish: writer B's write lands and claims
+    ``_seq=4``, then B stalls before its CAS while writer A commits twice
+    and a range merge folds 1..6 into ``h`` = 6.  B's publish must find
+    the counter past its claim, move its still-unlisted dir above ``h``
+    and win LWW over A's older version of the same key."""
     for i, k in enumerate(("a", "b", "c", "d")):
         coll.set(k, {"title": k.upper(), "n": i})
         coll.flush()                               # commits 0..3
-    stalled = coll._next_commit()                  # writer B mid-commit: 4
-    assert stalled == 4
-    coll.set("a", {"title": "A5", "n": 5})
-    coll.flush()                                   # writer A continues: 5
-    coll.set("e", {"title": "E6", "n": 6})
-    coll.flush()                                   # 6
-    before = sorted(tuple(r) for r in coll.scan().collect())
+    b = HadroCollection(spark, coll.path)
+    cas = b._update_manifest
 
-    coll.compact(upto=6, since=1)
-    # truncated at 3: commits 1-3 folded, 5/6 (above the in-flight 4)
-    # untouched, nothing at 4 created or deleted
-    assert sorted(coll.segment_stats()) == [0, 3, 5, 6]
-    assert sorted(tuple(r) for r in coll.scan().collect()) == before
-    assert coll.inflight_commits() == [4]
+    def stalled(mutate):
+        b._update_manifest = cas
+        assert os.listdir(os.path.join(coll._data_path, "_seq=4"))  # B's claim
+        coll.set("a", {"title": "A5", "n": 5})
+        coll.flush()                               # A: 5, 4 is claimed
+        coll.set("e", {"title": "E6", "n": 6})
+        coll.flush()                               # 6
+        coll.compact(upto=6, since=1)
+        assert sorted(coll.segment_stats()) == [0, 6]
+        return cas(mutate)
 
-    # writer B is known dead: clear the marker and the full range folds
-    coll.clear_inflight(4)
-    coll.compact(upto=6, since=1)
-    assert sorted(coll.segment_stats()) == [0, 6]
-    assert sorted(tuple(r) for r in coll.scan().collect()) == before
+    b._update_manifest = stalled
+    b.set("a", {"title": "B", "n": 9})
+    b.flush()
+    assert coll.get("a") == {"title": "B", "n": 9}
+    assert sorted(coll.segment_stats()) == [0, 6, 7]
+    assert not os.path.exists(os.path.join(coll._data_path, "_seq=4"))
+    assert sorted(tuple(r) for r in coll.scan().collect()) == [
+        ("a", "B", 9), ("b", "B", 1), ("c", "C", 2), ("d", "D", 3), ("e", "E6", 6),
+    ]
+
+
+@pytest.mark.slow
+def test_racing_flushes_each_publish_under_own_seq(spark, coll):
+    """More writers than cores race through the ``_seq`` claim and the
+    CAS (short switch interval): every commit is listed under its own
+    ``_seq``, every key reads back, and no claim or write dir is left."""
+    import sys
+    import threading
+
+    n_threads, per = 6, 2
+    errors = []
+
+    def writer(t):
+        try:
+            w = HadroCollection(spark, coll.path)
+            for i in range(per):
+                w.set(f"t{t}_{i}", {"title": f"T{t}", "n": i})
+                w.flush()
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    coll.set("base", {"title": "B", "n": 0})
+    coll.flush()
+    threads = [threading.Thread(target=writer, args=(t,)) for t in range(n_threads)]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    stats = coll.segment_stats()
+    assert len(stats) == 1 + n_threads * per
+    assert coll._read_manifest()["commits"] == max(stats) + 1
+    assert sorted(os.listdir(coll._data_path)) == sorted(f"_seq={n}" for n in stats)
+    assert len(coll) == 1 + n_threads * per
+    assert coll.get("t5_1") == {"title": "T5", "n": 1}
 
 
 def test_range_compact_ignores_unlisted_disk_dir(spark, coll):
-    """A _seq dir no manifest entry lists (a crashed writer's remnant
-    whose marker was cleared, or a foreign dir) is not part of the
-    collection: reads never see its rows and range compaction merges
-    around it without touching it."""
+    """A _seq dir no manifest entry lists (a crashed writer's remnant,
+    or a foreign dir) is not part of the collection: reads never see its
+    rows, range compaction merges around it without touching it, and
+    the next commit takes the next free ``_seq``."""
     for i, k in enumerate(("a", "b", "c", "d")):
         coll.set(k, {"title": k.upper(), "n": i})
         coll.flush()                               # commits 0..3
-    stalled = coll._next_commit()                  # 4: writer dies mid-commit
-    remnant = os.path.join(coll._data_path, f"_seq={stalled}")
+    remnant = os.path.join(coll._data_path, "_seq=4")  # died before its CAS
     spark.createDataFrame(
         [("a", 0, False, "GHOST", 9)],
         "_key string, _sub long, _deleted boolean, title string, n int",
     ).write.parquet(remnant)
-    coll.clear_inflight(stalled)                   # operator: writer is dead
     before = sorted(tuple(r) for r in coll.scan().collect())
     assert ("a", "A", 0) in before
     assert coll.get("a")["title"] == "A"
-    coll.compact(upto=stalled, since=1)
+    coll.compact(upto=4, since=1)
     assert sorted(coll.segment_stats()) == [0, 3]
     assert sorted(tuple(r) for r in coll.scan().collect()) == before
     assert os.listdir(remnant)                     # untouched, still unread
+    assert coll.get("a")["title"] == "A"
+    coll.set("f", {"title": "F", "n": 5})
+    coll.flush()
+    assert sorted(coll.segment_stats()) == [0, 3, 5]
     assert coll.get("a")["title"] == "A"
 
 
 def test_merge_df_noop_combination_allocates_nothing(spark, coll):
     """merge_df(when_matched='ignore', insert_unmatched=False) has nothing
-    to write: it must return BEFORE allocating a commit — the allocation
-    would strand an in-flight marker that blocks range compaction at
-    that seq forever (review finding)."""
+    to write: it returns without publishing a manifest version."""
+    from hadrodb_spark.sources.collection import _manifest_head
+
     coll.set("a", {"title": "A", "n": 1})
     coll.flush()
-    before = coll._read_manifest()["commits"]
+    head = _manifest_head(coll.path)[0]
     src = spark.createDataFrame([("a", "A2", 2)], "key string, title string, n int")
     coll.merge_df(src, key_col="key", when_matched="ignore", insert_unmatched=False)
-    m = coll._read_manifest()
-    assert m["commits"] == before
-    assert coll.inflight_commits() == []
+    assert _manifest_head(coll.path)[0] == head
+
+
+def test_each_commit_publishes_one_manifest_version(spark, coll):
+    """A commit's ``_seq`` is assigned inside the CAS that lists it, so
+    every write path publishes exactly one manifest version."""
+    from hadrodb_spark.sources.collection import _manifest_head
+
+    src = spark.createDataFrame(
+        [("a", "A1", 1), ("z", "Z1", 1)], "key string, title string, n int"
+    )
+    writes = {
+        "flush": lambda: (coll.set("a", {"title": "A0", "n": 0}), coll.flush()),
+        "append_df": lambda: coll.append_df(src, key_col="key"),
+        "merge_df": lambda: coll.merge_df(src, key_col="key"),
+        "delete_where": lambda: coll.delete_where("n = 1"),
+        "compact": coll.compact,
+    }
+    for name, write in writes.items():
+        head = _manifest_head(coll.path)[0]
+        write()
+        assert _manifest_head(coll.path)[0] == head + 1, name
+    assert sorted(coll.segment_stats()) == [4]
+    assert len(coll) == 0
 
 
 def test_failed_segment_write_cleans_marker_and_partial_dir(spark, coll, monkeypatch):
     """A transient Spark write failure in a SURVIVING process must not
-    strand the in-flight marker or a partial segment dir (review
-    finding): the guard drops both and re-raises, so the retry starts
-    clean and range compaction stays unblocked."""
+    leave its partial ``.w.<uuid>`` dir behind or publish anything: the
+    guard drops the dir and re-raises, so the retry starts clean."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     coll.set("a", {"title": "A", "n": 1})
@@ -605,28 +658,14 @@ def test_failed_segment_write_cleans_marker_and_partial_dir(spark, coll, monkeyp
     with pytest.raises(RuntimeError, match="injected"):
         coll.flush()
     monkeypatch.setattr(DataFrameWriter, "parquet", real)
-    assert coll.inflight_commits() == []          # marker cleaned
     assert sorted(coll.segment_stats()) == [0]
-    assert not os.path.exists(os.path.join(coll._data_path, "_seq=1"))  # no partial dir
+    assert os.listdir(coll._data_path) == ["_seq=0"]  # no partial dir
     coll.flush()                                  # staged rows retry cleanly
     assert coll.get("b")["title"] == "B"
-    # compaction over the gap still folds (burned seq blocks nothing)
     coll.set("c", {"title": "C", "n": 3})
     coll.flush()
     coll.compact(upto=max(coll.segment_stats()), since=1)
     assert len(coll) == 3
-
-
-def test_full_rewrite_clears_all_stranded_markers(coll):
-    """Full compact runs quiesced by contract — any in-flight marker it
-    finds is stranded by definition and must be self-healed, not left to
-    block every future range merge (review finding)."""
-    coll.set("a", {"title": "A", "n": 1})
-    coll.flush()
-    coll._next_commit()                            # stranded crash marker
-    assert coll.inflight_commits()
-    coll.compact()
-    assert coll.inflight_commits() == []
 
 
 def test_planned_scan_survives_range_compaction(coll):
@@ -685,7 +724,7 @@ def test_old_layout_stranded_full_rewrite_migrates(spark, coll):
     ``_seq=c`` dir holding the whole live view, before it published: a
     crash there left that dir next to a manifest of entries whose dirs
     were gone.  The old reader walked the directory and saw the live view;
-    migration lists the in-flight dir, clears its marker and drops the
+    migration lists the in-flight dir, drops the legacy marker key and the
     dirless entries, so reads, point gets and ``len`` agree with it."""
     import shutil
 
@@ -700,7 +739,7 @@ def test_old_layout_stranded_full_rewrite_migrates(spark, coll):
     coll.flush()                                   # 1
     before = sorted(tuple(r) for r in coll.scan().collect())
     live = coll._lww().filter(~F.col("_deleted")).drop("_seq")
-    c = coll._next_commit()                        # 2: in flight
+    c = 2                                          # the old rewrite's commit
     live.write.parquet(os.path.join(coll._data_path, f"_seq={c}"))
     for n in (0, 1):
         shutil.rmtree(os.path.join(coll._data_path, f"_seq={n}"))
@@ -709,11 +748,13 @@ def test_old_layout_stranded_full_rewrite_migrates(spark, coll):
         for s in m["segments"].values():
             del s["roots"]
         del m["listed"]
+        m["commits"] = c + 1                       # the old layout allocated c
+        m["inflight"] = {str(c): True}             # ...and marked it in flight
 
     C._cas_update_manifest(coll.path, strip)
     old = HadroCollection(spark, coll.path)
     assert sorted(old.segment_stats()) == [c]
-    assert old.inflight_commits() == []
+    assert "inflight" not in old._read_manifest()
     assert sorted(tuple(r) for r in old.scan().collect()) == before
     assert old.get("a")["title"] == "A1"
     assert old.get("c")["title"] == "C1"

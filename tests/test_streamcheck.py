@@ -364,3 +364,31 @@ def test_left_join_null_extension_through_parquet_sink(spark, tmp_path):
         for r in spark.read.parquet(out).filter("user_id >= 0").collect()
     )
     assert committed == [(5, 1, 3), (6, 2, None)], committed
+
+
+def test_sink_fixture_key_follows_collection_source(tmp_path, monkeypatch):
+    """The cached ``_sink`` collection is keyed on ``sources/collection.py``'s
+    source: changing that source changes its key, so a cache written by
+    other code is never read, while the base stream-fixture key (path +
+    size + mtime of the events table) stays put."""
+    import os
+    import shutil
+
+    from hadrodb_spark.operators import streamcheck as sc
+
+    sources = tmp_path / "sources"
+    sources.mkdir()
+    shutil.copy(os.path.join(sc._SOURCES_DIR, "collection.py"), sources)
+    monkeypatch.setattr(sc, "_SOURCES_DIR", str(sources))
+    monkeypatch.setattr(sc, "scratch_dir", lambda: str(tmp_path))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"events")
+    base = sc._stream_events_dir(str(sf))
+    sink = sc._built_by(str(sf), "sink", "collection")
+    assert sink.startswith(base + "_sink_")
+    with open(sources / "collection.py", "a") as f:
+        f.write("# a format change\n")
+    assert sc._stream_events_dir(str(sf)) == base
+    changed = sc._built_by(str(sf), "sink", "collection")
+    assert changed != sink and changed.startswith(base + "_sink_")

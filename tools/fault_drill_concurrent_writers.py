@@ -6,24 +6,28 @@ mutate ONE collection built from the sf1 ``orders`` table:
 
 - writer A: 4 ``merge_df`` commits over the ``o_orderkey % 4 == 0``
   stripe, then a size-tiered ``compact(upto=head, since=1)`` range merge
-  while writer B may still be committing (exercising the r12 in-flight
-  truncation under real concurrency);
+  while writer B may still be committing;
 - writer B: 4 ``merge_df`` commits over the disjoint ``% 4 == 1`` stripe.
 
 One CAS loss is FORCED deterministically, not hoped for: writer A's
-first manifest mutate holds its read-mutate-publish window open (flag
-file ``a_waiting``) until writer B publishes another commit, so A's
-``os.link`` MUST collide and retry against the new head — the drill
-asserts A observed ≥ 1 ``FileExistsError`` on a manifest version name
-and still committed everything.
+first manifest mutate — the publish of its first commit, whose output
+already sits in its claimed ``_seq=n`` dir — holds its
+read-mutate-publish window open (flag file ``a_waiting``) until writer B
+publishes another commit, so A's ``os.link`` MUST collide and retry
+against the new head.  B claimed the next ``_seq`` above A's, so the
+retry finds the commit counter past ``n`` and re-sequences A's dir to
+the new counter (``_seq`` is assigned at publish).  The drill asserts A
+observed ≥ 1 ``FileExistsError`` on a manifest version name, was
+re-sequenced at least once, and still committed everything.
 
 Afterwards the parent asserts, with a fresh session:
 - the LWW scan equals the batch-computed expected state (stripe A at
   base + 4000, stripe B at base + 8000, all other rows untouched) —
   compared via two-sided ``exceptAll`` counts;
-- manifest consistency: no in-flight markers left, the base and the
-  newest commit both listed in ``segment_stats()``, ``len(coll)`` ==
-  key count.
+- manifest consistency: every on-disk ``_seq=N`` dir is listed (or
+  retired by the range merge) and no ``.w.<uuid>`` write dir remains,
+  the base and the newest commit both listed in ``segment_stats()``,
+  ``len(coll)`` == key count.
 
 Usage: ``python tools/fault_drill_concurrent_writers.py [sf_dir]``
 (default ``/tmp/sf1.0``; use ``/root/testdata/sf0.01`` for a quick run).
@@ -67,13 +71,15 @@ def _orders(spark, sf_dir: str):
 
 def _writer(role: str, coll_path: str, sf_dir: str, sync_dir: str) -> None:
     """One driver process: N merge commits on its stripe (+ the range
-    merge, for writer A).  Counts manifest CAS losses via os.link."""
+    merge, for writer A).  Counts manifest CAS losses via os.link, and
+    writer A's publishes that found their ``_seq`` taken (re-sequenced)."""
     from pyspark.sql import functions as F
 
     import hadrodb_spark.sources.collection as C
     from hadrodb_spark.sources.collection import HadroCollection
 
     losses = {"n": 0}
+    resequenced = {"n": 0}
     real_link = os.link
 
     def counting_link(src, dst, *a, **kw):
@@ -96,7 +102,11 @@ def _writer(role: str, coll_path: str, sf_dir: str, sync_dir: str) -> None:
 
         def stalling_cas(path, mutate):
             def slow_mutate(m):
-                mutate(m)
+                try:
+                    mutate(m)
+                except C._Superseded:
+                    resequenced["n"] += 1
+                    raise
                 if state["armed"]:
                     state["armed"] = False
                     open(os.path.join(sync_dir, "a_waiting"), "w").close()
@@ -141,7 +151,11 @@ def _writer(role: str, coll_path: str, sf_dir: str, sync_dir: str) -> None:
     if role == "a":
         head = max(coll.segment_stats())
         coll.compact(upto=head, since=1)
-    print(json.dumps({"writer": role, "lost_races": losses["n"]}))
+    print(
+        json.dumps(
+            {"writer": role, "lost_races": losses["n"], "resequenced": resequenced["n"]}
+        )
+    )
 
 
 def main() -> int:
@@ -200,10 +214,17 @@ def main() -> int:
     lost = sum(r["lost_races"] for r in reports.values())
     print(f"# concurrent phase: {wall:.1f}s, CAS losses observed: {lost}")
     assert lost >= 1, "no CAS loss observed — rendezvous failed"
+    resequenced = reports["a"]["resequenced"]
+    assert resequenced >= 1, "writer A's publish was not re-sequenced"
 
     # ---- post-conditions, from a fresh open -------------------------------
     coll2 = HadroCollection(spark, coll_path)
-    assert coll2.inflight_commits() == [], coll2.inflight_commits()
+    m = coll2._read_manifest()
+    held = {r.split("/")[1] for r in coll2._roots(m)}
+    held |= {r.split("/")[1] for _, r in m.get("retired", [])}
+    on_disk = os.listdir(coll2._data_path)
+    assert not [d for d in on_disk if d.startswith(".w.")], on_disk
+    assert {d for d in on_disk if d.startswith("_seq=")} <= held, (on_disk, held)
     stats_keys = sorted(coll2.segment_stats())
     assert stats_keys[0] == 0, stats_keys  # the since=1 merge left the base
     assert stats_keys[-1] == coll2.current_commit(), stats_keys
@@ -243,6 +264,7 @@ def main() -> int:
                 "rows": n_keys,
                 "commits": 1 + 2 * N_COMMITS,
                 "cas_losses": lost,
+                "resequenced": resequenced,
                 "concurrent_wall_sec": round(wall, 1),
                 "lww_equivalent": True,
             }
