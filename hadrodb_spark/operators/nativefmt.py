@@ -23,84 +23,61 @@ storage. The read fans out one Spark task per segment (the hadrolog source's
 partitioning), and the aggregate is an ordinary codegen'd hash aggregation.
 Monetary values are carried as integer cents so the cross-engine sum is
 exact, not float-order-dependent.
+
+Fixtures: each row's input is built once and cached under ``scratch_dir()``
+(:func:`hadrodb_spark.config.events_fixture_dir` keys it,
+:func:`hadrodb_spark.config.build_once` publishes it). The native
+collection and its ``_compacted`` child are keyed on the events table's
+fingerprint plus the source of ``hadrolog.WRITER_MODULES``, the code that
+writes their bytes; the ORC/CSV/JSONL/XML fixtures on the fingerprint
+only, since Spark's writers, not repo code, write theirs.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadrodb_spark.config import scratch_dir
+from hadrodb_spark.config import build_once, events_fixture_dir
 from hadrodb_spark.operators.relational import load
 from hadrodb_spark.sources import hadrolog
 
 _N_SEGMENTS = 4
-_FIXTURE_VERSION = "v3"  # v3: built via the DataSource writer path
 
 
-def _native_events_dir(sf_dir: str) -> str:
-    """Cache key = fixture version + a content fingerprint of the source
-    events table (absolute path, size, mtime).  Two datasets sharing a
-    directory basename, or a regenerated dataset at the same path, get
-    distinct fixture dirs instead of silently reusing stale segments."""
-    import hashlib
-
-    src = os.path.join(os.path.realpath(sf_dir), "events.parquet")
-    try:
-        st = os.stat(src)
-        ident = f"{src}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = src
-    tag = hashlib.sha256(ident.encode()).hexdigest()[:16]
-    # fixture dirs AND their build stagings (tempfile.mkdtemp) both live
-    # under scratch_dir(), so the atomic-publish os.rename never crosses a
-    # filesystem boundary (no EXDEV)
-    return os.path.join(
-        scratch_dir(), f"hadrolog_events_{_FIXTURE_VERSION}_{tag}"
-    )
-
-
-def _build_native_collection(spark: SparkSession, sf_dir: str, dest: str) -> None:
-    """Write events as a native-format collection through the hadrolog
-    DataSource WRITER: one segment per input partition, streamed
+def _native_collection(spark: SparkSession, sf_dir: str) -> str:
+    """The events table as a native-format collection, written through the
+    hadrolog DataSource WRITER: one segment per input partition, streamed
     executor-side with the writer's own two-phase commit (tasks stage into
     the destination filesystem, the driver publishes sequential segment
     numbers) — the cluster-safe twin of the reference's append
     (``hadro/engine.py:122-137``), with no driver-local paths in the data
     path. 'error' events are framed as tombstones so the scan's skip path
-    is exercised for real. The outer staging+rename here is FIXTURE
-    discipline (two concurrent fixture builders must not double-append),
-    not a write-path requirement."""
-    ev = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-            (F.col("event_type") == "error").alias("deleted"),
-        )
-        .repartition(_N_SEGMENTS, "event_id")
-    )
+    is exercised for real. Keyed on the writer's code as well as the
+    events table, since a framing or codec change changes the bytes."""
 
-    staging = tempfile.mkdtemp(prefix="hadrolog_build_", dir=scratch_dir())
-    (
-        ev.write.format("hadrolog")
-        .option("path", staging)
-        .option("deleted_col", "deleted")
-        .mode("append")
-        .save()
-    )
-    try:
-        os.rename(staging, dest)  # atomic publish; loser of a race cleans up
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-        if not os.path.isdir(dest):
-            raise
+    def build(staging: str) -> None:
+        (
+            load(spark, sf_dir, "events")
+            .select(
+                "event_id",
+                "user_id",
+                "event_type",
+                F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+                (F.col("event_type") == "error").alias("deleted"),
+            )
+            .repartition(_N_SEGMENTS, "event_id")
+            .write.format("hadrolog")
+            .option("path", staging)
+            .option("deleted_col", "deleted")
+            .mode("append")
+            .save()
+        )
+
+    dest = events_fixture_dir(sf_dir, "hadrolog", hadrolog.WRITER_MODULES)
+    return build_once(dest, build)
 
 
 def hadrolog_scan_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,12 +87,9 @@ def hadrolog_scan_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     records are physically present in the segments but skipped at scan
     (``hadro/engine.py:169-170`` semantics)."""
     hadrolog.register(spark)
-    dest = _native_events_dir(sf_dir)
-    if not os.path.isdir(dest):
-        _build_native_collection(spark, sf_dir, dest)
     scanned = (
         spark.read.format("hadrolog")
-        .option("path", dest)
+        .option("path", _native_collection(spark, sf_dir))
         .option("ddl", "event_id bigint, user_id bigint, event_type string, cents bigint")
         .load()
     )
@@ -140,32 +114,21 @@ def compact_native_collection(
     only mark dead.  The distributed shape mirrors the write path: one
     reader task per source segment streams straight into one staged
     output segment, no shuffle, no driver data path; all-tombstone
-    segments produce no output file (the writer skips empty tasks)."""
+    segments produce no output file (the writer skips empty tasks).  The
+    new log is published in one rename, and an existing ``dest`` is left
+    as it is."""
     hadrolog.register(spark)
-    live = (
-        spark.read.format("hadrolog")
+    build_once(
+        dest,
+        lambda staging: spark.read.format("hadrolog")
         .option("path", src)
         .option("ddl", ddl or _EV_DDL)
         .load()
+        .write.format("hadrolog")
+        .option("path", staging)
+        .mode("append")
+        .save(),
     )
-    # Stage NEXT TO the destination (same filesystem), not under the
-    # global tempdir: os.rename across mounts raises EXDEV, which would
-    # make compaction to any other filesystem impossible.  The write is
-    # inside the try so a failed job can't leak the staging directory.
-    parent = os.path.dirname(os.path.abspath(dest)) or "."
-    staging = tempfile.mkdtemp(prefix="hadrolog_compact_", dir=parent)
-    try:
-        live.write.format("hadrolog").option("path", staging).mode(
-            "append"
-        ).save()
-        os.rename(staging, dest)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-        if not os.path.isdir(dest):
-            raise
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
 
 
 def hadrolog_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,12 +143,9 @@ def hadrolog_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     records and (b) physically dropped every tombstone, not merely kept
     skipping them."""
     hadrolog.register(spark)
-    src = _native_events_dir(sf_dir)
-    if not os.path.isdir(src):
-        _build_native_collection(spark, sf_dir, src)
+    src = _native_collection(spark, sf_dir)
     dest = src + "_compacted"
-    if not os.path.isdir(dest):
-        compact_native_collection(spark, src, dest)
+    compact_native_collection(spark, src, dest)
     scanned = (
         spark.read.format("hadrolog")
         .option("path", dest)
@@ -221,34 +181,11 @@ def orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark deployment exchanges with Hive-era warehouses; this verifies
     the full write→read path (type mapping, predicate pushdown at the
     ORC reader) end-to-end against the parquet-direct oracle — the
-    format tier next to the native hadrolog round-trip. Fixture dir is
-    content-keyed + atomically published (the hadrolog discipline);
-    values ride as exact integer cents. Avro is NOT exercised: its data
-    source module ships outside the Spark distribution and is absent in
-    this environment (probed; Failed to find data source)."""
-    dest = _native_events_dir(sf_dir) + "_orc"
-    if not os.path.isdir(dest):
-        staging = tempfile.mkdtemp(prefix="orc_build_", dir=scratch_dir())
-        try:
-            target = os.path.join(staging, "data")
-            (
-                load(spark, sf_dir, "events")
-                .select(
-                    "event_id",
-                    "user_id",
-                    "event_type",
-                    F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-                )
-                .write.mode("overwrite")
-                .orc(target)
-            )
-            os.rename(staging, dest)
-        except Exception:
-            # failed write OR lost publish race: never leak the staging dir
-            shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.isdir(dest):
-                raise
-    scanned = spark.read.orc(os.path.join(dest, "data"))
+    format tier next to the native hadrolog round-trip; values ride as
+    exact integer cents. Avro is NOT exercised: its data source module
+    ships outside the Spark distribution and is absent in this
+    environment (probed; Failed to find data source)."""
+    scanned = spark.read.orc(_interchange_fixture(spark, sf_dir, "orc"))
     return (
         scanned.filter(F.col("event_type") != "error")
         .groupBy("event_type")
@@ -262,33 +199,33 @@ def orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _interchange_fixture(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Build (once) the events table written out in an interchange format
-    (csv / jsonl), with the hadrolog fixture discipline: content-keyed
-    cache dir, staging + atomic rename publish, integer cents."""
-    dest = _native_events_dir(sf_dir) + f"_{kind}"
-    if not os.path.isdir(dest):
-        staging = tempfile.mkdtemp(prefix=f"{kind}_build_", dir=scratch_dir())
-        try:
-            target = os.path.join(staging, "data")
-            ev = load(spark, sf_dir, "events").select(
+    """The events table written out (once) in an interchange format (orc /
+    csv / jsonl / xml), with integer cents; returns its data dir. Keyed on
+    the events table only: Spark's writers, not repo code, decide these
+    bytes."""
+
+    def build(staging: str) -> None:
+        target = os.path.join(staging, "data")
+        w = (
+            load(spark, sf_dir, "events")
+            .select(
                 "event_id",
                 "user_id",
                 "event_type",
                 F.round(F.col("value") * 100).cast("bigint").alias("cents"),
             )
-            if kind == "csv":
-                ev.write.mode("overwrite").option("header", "true").csv(target)
-            elif kind == "xml":
-                ev.write.mode("overwrite").format("xml").option(
-                    "rowTag", "event"
-                ).save(target)
-            else:
-                ev.write.mode("overwrite").json(target)
-            os.rename(staging, dest)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.isdir(dest):
-                raise
+            .write.mode("overwrite")
+        )
+        if kind == "orc":
+            w.orc(target)
+        elif kind == "csv":
+            w.option("header", "true").csv(target)
+        elif kind == "xml":
+            w.format("xml").option("rowTag", "event").save(target)
+        else:
+            w.json(target)
+
+    dest = build_once(events_fixture_dir(sf_dir, kind), build)
     return os.path.join(dest, "data")
 
 

@@ -22,7 +22,6 @@ the result a closed-form batch relation.
 from __future__ import annotations
 
 import functools
-import hashlib
 import os
 import shutil
 import tempfile
@@ -30,15 +29,16 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadrodb_spark.config import scratch_dir
+from hadrodb_spark.config import build_once, events_fixture_dir, scratch_dir
 from hadrodb_spark.operators.relational import load
 from hadrodb_spark.streaming.events import EVENT_SCHEMA, tumbling_counts
 
 ROWS_ONLY: tuple[str, ...] = ()
 
-_SOURCES_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sources"
-)
+#: The modules that write the ``_sink`` fixture's collection: the store
+#: itself, and the ingest that drives ``append_df`` and writes the
+#: collection's ``_hadro_stream_batch.json`` marker.
+_SINK_MODULES = ("sources/collection.py", "streaming/ingest.py")
 
 
 def _utc_pinned(fn):
@@ -112,24 +112,6 @@ def _state_pinned(fn):
     return wrapper
 
 
-def _build_fixture(dest: str, build) -> None:
-    """Run ``build(staging)`` then atomically publish staging → dest.
-    Staging lives under scratch_dir() like dest, so the rename never
-    crosses a filesystem (no EXDEV); any failure cleans staging, and a
-    lost publish race is fine when the winner's dest exists."""
-    staging = tempfile.mkdtemp(prefix="streq_build_", dir=scratch_dir())
-    try:
-        build(staging)
-        os.rename(staging, dest)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-        if not os.path.isdir(dest):
-            raise
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-
-
 def _run_bounded(spark: SparkSession, stream_df: DataFrame, mode: str) -> str:
     """availableNow run into a uniquely-named memory sink; returns the
     sink's table name after the query terminates.
@@ -169,35 +151,11 @@ def _drain(spark: SparkSession, name: str, final_df: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def _stream_events_dir(sf_dir: str) -> str:
-    """Fixture cache dir, fingerprinted like nativefmt._native_events_dir
-    (absolute path + size + mtime of the source events table) so a
-    regenerated dataset never reuses stale stream files."""
-    src = os.path.join(os.path.realpath(sf_dir), "events.parquet")
-    try:
-        st = os.stat(src)
-        ident = f"{src}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        ident = src
-    tag = hashlib.sha256(ident.encode()).hexdigest()[:16]
-    return os.path.join(scratch_dir(), f"stream_events_{tag}")
-
-
-def _built_by(sf_dir: str, kind: str, module: str) -> str:
-    """Cache dir of a fixture written through ``sources/<module>.py``:
-    the ``_stream_events_dir`` key plus a hash of that module's source,
-    so a cache written by other code (another checkout, an older
-    format) is never read."""
-    with open(os.path.join(_SOURCES_DIR, f"{module}.py"), "rb") as f:
-        code = hashlib.sha256(f.read()).hexdigest()[:16]
-    return f"{_stream_events_dir(sf_dir)}_{kind}_{code}"
-
-
-def _build_stream_fixture(spark: SparkSession, sf_dir: str, dest: str) -> None:
+def _events_fixture(spark: SparkSession, sf_dir: str) -> str:
     """events.parquet (TIMESTAMP NANOS) rewritten as 8 µs-timestamp files —
     the multi-commit segment directory a collection's appenders produce."""
-    _build_fixture(
-        dest,
+    return build_once(
+        events_fixture_dir(sf_dir),
         lambda staging: load(spark, sf_dir, "events")
         .repartition(8)
         .write.mode("overwrite")
@@ -218,9 +176,7 @@ def stream_tumbling_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output discipline: window bounds as UTC strings (no raw timestamps),
     counts bigint, value totals decimal-summed then double."""
-    fixture = _stream_events_dir(sf_dir)
-    if not os.path.isdir(fixture):
-        _build_stream_fixture(spark, sf_dir, fixture)
+    fixture = _events_fixture(spark, sf_dir)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 2)
@@ -249,7 +205,7 @@ ORACLE: dict[str, str] = {
 }
 
 
-def _build_dup_stream_fixture(spark: SparkSession, sf_dir: str, dest: str) -> None:
+def _dup_fixture(spark: SparkSession, sf_dir: str) -> str:
     """events plus an exact duplicate of the even-event_id half, the
     duplicates written as SEPARATE files from the originals so the dedup
     state must survive across micro-batches to catch them."""
@@ -261,7 +217,7 @@ def _build_dup_stream_fixture(spark: SparkSession, sf_dir: str, dest: str) -> No
             "append"
         ).parquet(staging)
 
-    _build_fixture(dest, build)
+    return build_once(events_fixture_dir(sf_dir, "dup"), build)
 
 
 @_utc_pinned
@@ -278,9 +234,7 @@ def stream_dedup_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The per-type aggregate runs batch-side over the sink table, keeping
     the compared relation |event_type| rows with decimal-exact sums."""
-    fixture = _stream_events_dir(sf_dir) + "_dup"
-    if not os.path.isdir(fixture):
-        _build_dup_stream_fixture(spark, sf_dir, fixture)
+    fixture = _dup_fixture(spark, sf_dir)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 2)
@@ -367,9 +321,7 @@ def _append_sentinel_event(
     _time.sleep(0.05)
 
 
-def _build_session_stream_fixture(
-    spark: SparkSession, sf_dir: str, dest: str
-) -> None:
+def _session_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Chronological 8-file replay plus one far-future sentinel event
     (user_id = −1, max ts + 10 days) whose arrival advances the watermark
     past every real session's end — the standard trick for draining
@@ -381,7 +333,7 @@ def _build_session_stream_fixture(
             spark, staging, 10**9, mx + 10 * 24 * 3600, "sentinel"
         )
 
-    _build_fixture(dest, build)
+    return build_once(events_fixture_dir(sf_dir, "sess"), build)
 
 
 @_utc_pinned
@@ -398,9 +350,7 @@ def stream_session_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``session_window_batch`` runs, now through the streaming engine."""
     from hadrodb_spark.streaming.events import session_windows
 
-    fixture = _stream_events_dir(sf_dir) + "_sess"
-    if not os.path.isdir(fixture):
-        _build_session_stream_fixture(spark, sf_dir, fixture)
+    fixture = _session_fixture(spark, sf_dir)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 2)
@@ -458,9 +408,7 @@ def stream_join_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     The output aggregates the match set batch-side (per signup-hour
     counts, decimal-exact purchase value) to keep the compared relation
     small and tie-free."""
-    fixture = _stream_events_dir(sf_dir) + "_sess"
-    if not os.path.isdir(fixture):
-        _build_session_stream_fixture(spark, sf_dir, fixture)
+    fixture = _session_fixture(spark, sf_dir)
 
     def _side(tp: str, prefix: str):
         return (
@@ -548,9 +496,7 @@ def stream_custom_state_equivalence(spark: SparkSession, sf_dir: str) -> DataFra
     so each user's snapshots genuinely accumulate across micro-batches."""
     from hadrodb_spark.streaming.ingest import running_user_totals
 
-    fixture = _stream_events_dir(sf_dir) + "_sess"
-    if not os.path.isdir(fixture):
-        _build_session_stream_fixture(spark, sf_dir, fixture)
+    fixture = _session_fixture(spark, sf_dir)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 2)
@@ -587,7 +533,7 @@ ORACLE["stream_custom_state_equivalence"] = """
 """
 
 
-def _build_sink_collection(spark: SparkSession, sf_dir: str, dest: str) -> None:
+def _sink_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Land the duplicate-bearing stream in a fresh HadroCollection via
     ``stream_into_collection`` (foreachBatch; one micro-batch = one atomic
     collection commit; WAL-replay marker), keyed by event_id so the
@@ -598,9 +544,7 @@ def _build_sink_collection(spark: SparkSession, sf_dir: str, dest: str) -> None:
         from hadrodb_spark.sources.collection import HadroCollection
         from hadrodb_spark.streaming.ingest import stream_into_collection
 
-        dup_fixture = _stream_events_dir(sf_dir) + "_dup"
-        if not os.path.isdir(dup_fixture):
-            _build_dup_stream_fixture(spark, sf_dir, dup_fixture)
+        dup_fixture = _dup_fixture(spark, sf_dir)
         coll = HadroCollection(
             spark, os.path.join(staging, "coll"), EVENT_SCHEMA
         )
@@ -618,7 +562,7 @@ def _build_sink_collection(spark: SparkSession, sf_dir: str, dest: str) -> None:
         q.awaitTermination()
         coll.close()
 
-    _build_fixture(dest, build)
+    return build_once(events_fixture_dir(sf_dir, "sink", _SINK_MODULES), build)
 
 
 @_utc_pinned
@@ -638,9 +582,7 @@ def stream_sink_collection_equivalence(
     source → state → sink.)"""
     from hadrodb_spark.sources.collection import HadroCollection
 
-    fixture = _built_by(sf_dir, "sink", "collection")
-    if not os.path.isdir(fixture):
-        _build_sink_collection(spark, sf_dir, fixture)
+    fixture = _sink_fixture(spark, sf_dir)
     coll = HadroCollection(spark, os.path.join(fixture, "coll"))
     return (
         coll.scan()
@@ -685,9 +627,7 @@ def stream_sliding_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     value totals decimal-summed then double."""
     from hadrodb_spark.streaming.events import sliding_counts
 
-    fixture = _stream_events_dir(sf_dir)
-    if not os.path.isdir(fixture):
-        _build_stream_fixture(spark, sf_dir, fixture)
+    fixture = _events_fixture(spark, sf_dir)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 2)
@@ -782,11 +722,10 @@ def stream_hadrolog_source_equivalence(
     from hadrodb_spark.sources import hadrolog
 
     hadrolog.register(spark)
-    cache = _built_by(sf_dir, "native", "hadrolog")
-    if not os.path.isdir(cache):
-        _build_fixture(
-            cache, lambda staging: _write_native_wave(spark, sf_dir, staging, 1)
-        )
+    cache = build_once(
+        events_fixture_dir(sf_dir, "native", hadrolog.WRITER_MODULES),
+        lambda staging: _write_native_wave(spark, sf_dir, staging, 1),
+    )
     # Wave-2 segments cached like wave 1 (r13, guide §2.4): the DataSource
     # writer's batch job (repartition + per-task msgpack framing + commit
     # renames) ran on EVERY invocation even though its output is a pure
@@ -795,23 +734,18 @@ def stream_hadrolog_source_equivalence(
     # The cache is built THROUGH the same writer once; per invocation the
     # segments hardlink into the work dir only after run 1, so the
     # mid-stream-append arrival order this row certifies is unchanged.
-    cache_w2 = _built_by(sf_dir, "native_w2", "hadrolog")
-    if not os.path.isdir(cache_w2):
+    def _build_w2(staging: str) -> None:
+        # append after wave 1's segments, then keep only the new ones
+        for fn in os.listdir(cache):
+            os.link(os.path.join(cache, fn), os.path.join(staging, fn))
+        _write_native_wave(spark, sf_dir, staging, 0)
+        for fn in os.listdir(cache):
+            os.unlink(os.path.join(staging, fn))
 
-        def _build_w2(staging: str) -> None:
-            t = tempfile.mkdtemp(prefix="hlw2_build_", dir=scratch_dir())
-            try:
-                for fn in os.listdir(cache):
-                    os.link(os.path.join(cache, fn), os.path.join(t, fn))
-                _write_native_wave(spark, sf_dir, t, 0)
-                wave1 = set(os.listdir(cache))
-                for fn in os.listdir(t):
-                    if fn not in wave1 and os.path.isfile(os.path.join(t, fn)):
-                        os.link(os.path.join(t, fn), os.path.join(staging, fn))
-            finally:
-                shutil.rmtree(t, ignore_errors=True)
-
-        _build_fixture(cache_w2, _build_w2)
+    cache_w2 = build_once(
+        events_fixture_dir(sf_dir, "native_w2", hadrolog.WRITER_MODULES),
+        _build_w2,
+    )
     # per-invocation working copy: run 2 appends, so the shared cache must
     # stay wave-1-only (hardlinks are cheap and the segments are immutable)
     base = tempfile.mkdtemp(
@@ -917,9 +851,6 @@ def _late_drop_waves_dir(spark: SparkSession, sf_dir: str) -> str:
     fixture; each invocation hardlinks the files into its own src dir so
     the replay ORDER (wave2 appears only after run 1) stays a
     per-invocation property.  Pinned mtimes ride the cached inodes."""
-    dest = _stream_events_dir(sf_dir) + "_late"
-    if os.path.isdir(dest):
-        return dest
 
     def build(staging: str) -> None:
         ev = load(spark, sf_dir, "events").select(
@@ -946,8 +877,7 @@ def _late_drop_waves_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         _publish_wave(spark, wave2, staging, "wave2.parquet", t0 + 120)
 
-    _build_fixture(dest, build)
-    return dest
+    return build_once(events_fixture_dir(sf_dir, "late"), build)
 
 
 @_utc_pinned
@@ -1067,9 +997,7 @@ ORACLE["stream_late_drop_equivalence"] = """
 
 
 # --- stream-stream LEFT OUTER join (round-10) ----------------------------------
-def _build_louter_stream_fixture(
-    spark: SparkSession, sf_dir: str, dest: str
-) -> None:
+def _louter_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Chronological 8-file replay of events (same time-range split the
     session fixture uses — increasing mtimes ⇒ the file source replays in
     event-time order, so nothing is ever late), plus TWO far-future
@@ -1088,7 +1016,7 @@ def _build_louter_stream_fixture(
                 etype,
             )
 
-    _build_fixture(dest, build)
+    return build_once(events_fixture_dir(sf_dir, "louter"), build)
 
 
 @_utc_pinned
@@ -1120,9 +1048,7 @@ def stream_left_join_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon, not the corpus."""
     from hadrodb_spark.streaming.joins import left_outer_purchases
 
-    fixture = _stream_events_dir(sf_dir) + "_louter"
-    if not os.path.isdir(fixture):
-        _build_louter_stream_fixture(spark, sf_dir, fixture)
+    fixture = _louter_fixture(spark, sf_dir)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA)
         # 4 files/trigger ⇒ 3 micro-batches over the 10-file fixture (same
@@ -1232,9 +1158,7 @@ def stream_session_sink_equivalence(
 
     from hadrodb_spark.streaming.events import session_windows
 
-    fixture = _stream_events_dir(sf_dir) + "_sess"
-    if not os.path.isdir(fixture):
-        _build_session_stream_fixture(spark, sf_dir, fixture)
+    fixture = _session_fixture(spark, sf_dir)
     run_dir = os.path.join(
         scratch_dir(), f"streq_sink_{uuid.uuid4().hex}"
     )
@@ -1303,9 +1227,7 @@ def stream_join_sink_equivalence(
 
     from hadrodb_spark.streaming.joins import left_outer_purchases
 
-    fixture = _stream_events_dir(sf_dir) + "_louter"
-    if not os.path.isdir(fixture):
-        _build_louter_stream_fixture(spark, sf_dir, fixture)
+    fixture = _louter_fixture(spark, sf_dir)
     run_dir = os.path.join(
         scratch_dir(), f"streq_jsink_{uuid.uuid4().hex}"
     )

@@ -45,17 +45,31 @@ record, and the frame is read once all its bytes land. Compacting a
 collection mid-stream is NOT supported (segments must only grow); a
 segment vanishing under a live stream raises instead of going stale.
 
+ONE READ PATH: batch and stream share one partition type, a slice
+``(segment, start, end)`` of byte offsets, and one ``read`` that walks it
+with :func:`iter_records`, the only loop that reads payloads. A batch scan
+plans one slice per segment, ending at the segment's size at planning, so
+it sees each segment as it stood when the query was planned (frames an
+appender adds later, and a tail still torn at planning, are not read) —
+the same snapshot a stream micro-batch gets from its end offsets. A stream
+micro-batch plans one slice per grown segment, from its committed to its
+latest aligned offset.
+
 Scale note: one Spark input partition per segment file (segments are
 append-ordered units, like parquet files in HadroCollection); a 1000-segment
-collection fans out across the cluster with no coordination. The streaming
-offset walk is driver-side metadata work proportional to NEW bytes only
-(alignment resumes from the previous offset, never rescans history).
+collection fans out across the cluster with no coordination. Splitting a
+large segment for parallelism only needs ``partitions()`` to cut it at
+frame boundaries found by a header-only walk like :func:`aligned_length`'s.
+The streaming offset walk is driver-side metadata work proportional to NEW
+bytes only (alignment resumes from the previous offset, never rescans
+history).
 """
 
 from __future__ import annotations
 
 import os
 import struct
+import sys
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -70,6 +84,11 @@ from pyspark.sql.datasource import (
 )
 
 DELETED_FLAG = 0x01
+
+#: The package modules whose source decides a written segment's bytes: the
+#: framing here and the row codec. Caches of written segments key on them
+#: (:func:`hadrodb_spark.config.events_fixture_dir`).
+WRITER_MODULES = ("sources/hadrolog.py", "sources/mpack.py")
 
 LOG_SCHEMA = T.StructType(
     [
@@ -105,20 +124,32 @@ def encode_row_record(values, deleted: bool = False) -> bytes:
 
 
 def iter_records(
-    path: str, include_deleted: bool = False
+    path: str,
+    include_deleted: bool = False,
+    start: int = 0,
+    end: int | None = None,
 ) -> Iterator[tuple[int, int, bytes]]:
-    """Yield (offset, flags, payload) from one segment file, skipping
-    tombstones unless asked — the ``hadro/engine.py:139-177`` scan loop."""
+    """Yield (offset, flags, payload) for the complete frames of one segment
+    file that lie in ``[start, end)`` (``end`` defaults to the file's size
+    at open), skipping tombstones unless asked — the
+    ``hadro/engine.py:139-177`` scan loop, and the only loop here that
+    reads payloads. ``start`` must be a frame boundary; a torn tail, or a
+    frame running past ``end``, ends the walk."""
     with open(path, "rb") as f:
-        offset = 0
-        while True:
+        if end is None:
+            end = os.fstat(f.fileno()).st_size
+        f.seek(start)
+        offset = start
+        while offset < end:
             header = f.read(5)
             if len(header) < 5:
                 return
             flags, size = struct.unpack(">BI", header)
+            if offset + 5 + size > end:
+                return  # torn tail write — ignore, like a crashed appender
             payload = f.read(size)
             if len(payload) < size:
-                return  # torn tail write — ignore, like a crashed appender
+                return  # the file shrank under the read
             if include_deleted or not (flags & DELETED_FLAG):
                 yield offset, flags, payload
             offset += 5 + size
@@ -162,9 +193,13 @@ def _parse_ddl(ddl: str) -> T.StructType:
     return T.StructType(fields)
 
 
-class _SegmentPartition(InputPartition):
-    def __init__(self, path: str) -> None:
+class _SlicePartition(InputPartition):
+    """The frames of one segment in the byte range ``[start, end)``."""
+
+    def __init__(self, path: str, start: int, end: int) -> None:
         self.path = path
+        self.start = start
+        self.end = end
 
 
 _SCALARS = (bool, int, float, str, bytes)
@@ -282,28 +317,37 @@ class HadroLogReader(DataSourceReader):
         return True
 
     def partitions(self) -> list[InputPartition]:
+        # one slice per segment, ending at the segment's size NOW: the
+        # read sees each segment as it stood at planning
         segs = sorted(
             f for f in os.listdir(self.dir) if f.endswith(".data")
         )
         if self._seg_allow is not None:
             segs = [s for s in segs if s in self._seg_allow]
-        return [_SegmentPartition(os.path.join(self.dir, s)) for s in segs]
+        paths = [os.path.join(self.dir, s) for s in segs]
+        return [_SlicePartition(p, 0, os.path.getsize(p)) for p in paths]
 
-    def read(self, partition: _SegmentPartition) -> Iterator[tuple]:
+    def read(self, partition: _SlicePartition | None) -> Iterator[tuple]:
         # per-task read; raw mode is stdlib-only, typed mode imports the
         # package's codec (register() ships it to executors via addPyFile)
+        if partition is None:
+            return  # no segment planned: Spark reads one empty partition
+        frames = iter_records(
+            partition.path,
+            self.include_deleted and not self.typed,
+            partition.start,
+            partition.end,
+        )
         if self.typed:
             from hadrodb_spark.sources.mpack import decode_row
 
-            for _, _, payload in iter_records(partition.path, False):
+            for _, _, payload in frames:
                 row = decode_row(payload)
                 if self._keep(row):
                     yield row
             return
         seg = os.path.basename(partition.path)
-        for offset, flags, payload in iter_records(
-            partition.path, self.include_deleted
-        ):
+        for offset, flags, payload in frames:
             row = (seg, offset, flags, payload)
             if self._keep(row):
                 yield row
@@ -399,13 +443,6 @@ class HadroLogWriter(DataSourceWriter):
         shutil.rmtree(self.staging, ignore_errors=True)
 
 
-class _SlicePartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int) -> None:
-        self.path = path
-        self.start = start
-        self.end = end
-
-
 def aligned_length(path: str, start: int = 0) -> int:
     """Byte offset just past the last COMPLETE frame at or after ``start``
     — the streaming offset primitive. Walks headers only (one seek per
@@ -428,14 +465,15 @@ def aligned_length(path: str, start: int = 0) -> int:
             off += 5 + sz
 
 
-class HadroLogStreamReader(DataSourceStreamReader):
+class HadroLogStreamReader(HadroLogReader, DataSourceStreamReader):
     """Micro-batch reader over a growing native collection (module
-    docstring, STREAM read). Offsets: ``{"segs": {segment: aligned_bytes}}``."""
+    docstring, STREAM read). Offsets: ``{"segs": {segment: aligned_bytes}}``.
+    Each micro-batch plans one slice per grown segment, between its
+    committed and its latest aligned offset, and reads it with the batch
+    reader's ``read``."""
 
     def __init__(self, options: dict) -> None:
-        self.dir = options["path"]
-        self.include_deleted = options.get("include_deleted", "false") == "true"
-        self.typed = "ddl" in options
+        super().__init__(options)
         self._aligned: dict[str, int] = {}  # driver-side incremental cache
 
     def initialOffset(self) -> dict:
@@ -504,35 +542,6 @@ class HadroLogStreamReader(DataSourceStreamReader):
                 out.append(_SlicePartition(os.path.join(self.dir, seg), s, int(e)))
         return out
 
-    def read(self, partition: _SlicePartition) -> Iterator[tuple]:
-        if self.typed:
-            from hadrodb_spark.sources.mpack import decode_row
-
-        seg = os.path.basename(partition.path)
-        with open(partition.path, "rb") as f:
-            f.seek(partition.start)
-            offset = partition.start
-            while offset < partition.end:
-                header = f.read(5)
-                if len(header) < 5:
-                    return
-                flags, size = struct.unpack(">BI", header)
-                payload = f.read(size)
-                if len(payload) < size:
-                    return
-                if self.typed:
-                    if not (flags & DELETED_FLAG):
-                        yield decode_row(payload)
-                elif self.include_deleted or not (flags & DELETED_FLAG):
-                    yield (seg, offset, flags, payload)
-                offset += 5 + size
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in Spark's checkpoint; nothing source-side
-
-    def stop(self) -> None:
-        pass
-
 
 class HadroLogDataSource(DataSource):
     """``spark.read.format("hadrolog").option("path", dir)`` over a native
@@ -559,22 +568,6 @@ class HadroLogDataSource(DataSource):
 
     def writer(self, schema: T.StructType, overwrite: bool) -> HadroLogWriter:
         return HadroLogWriter(self.options, schema, overwrite)
-
-
-class _NoPushdownReader(HadroLogReader):
-    # genuinely NOT overridden (Spark's worker checks __func__ identity):
-    # scans work with filters evaluated Spark-side only
-    pushFilters = DataSourceReader.pushFilters
-
-
-class _NoPushdownHadroLogDataSource(HadroLogDataSource):
-    """Fallback registered when ``spark.sql.python.filterPushdown.enabled``
-    cannot be set: Spark hard-errors on a reader that overrides
-    ``pushFilters`` while the conf is off, so degrading means actually
-    removing the override, not ignoring it."""
-
-    def reader(self, schema: T.StructType) -> HadroLogReader:
-        return _NoPushdownReader(self.options)
 
 
 def register(spark) -> None:
@@ -617,14 +610,8 @@ def register(spark) -> None:
         for rel, data in blobs:
             z.writestr(zipfile.ZipInfo(rel, date_time=(2020, 1, 1, 0, 0, 0)), data)
     spark.sparkContext.addPyFile(zpath)
-    cls = HadroLogDataSource
-    try:
-        # default-off in Spark 4.1; required for the reader's pushFilters
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        # conf locked down: register the variant whose reader genuinely
-        # does not override pushFilters (Spark hard-errors otherwise)
-        cls = _NoPushdownHadroLogDataSource
+    # default-off in Spark 4.1; required for the reader's pushFilters
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     # The BATCH planner worker resolves imports through the addPyFile
     # includes above, but Spark 4.1's STREAMING source planner
     # (python_streaming_source_runner) spawns without them — a stream
@@ -633,15 +620,10 @@ def register(spark) -> None:
     # modules for BY-VALUE pickling (the repo's mapInPandas closure
     # discipline, applied at module granularity via pyspark's vendored
     # cloudpickle) makes every pickled reader self-contained instead.
-    try:
-        import sys as _sys
+    from pyspark import cloudpickle
 
-        from pyspark import cloudpickle as _cp
+    from hadrodb_spark.sources import mpack
 
-        from hadrodb_spark.sources import mpack as _mpack
-
-        _cp.register_pickle_by_value(_sys.modules[__name__])
-        _cp.register_pickle_by_value(_mpack)
-    except Exception:
-        pass  # older cloudpickle: fall back to the addPyFile path only
-    spark.dataSource.register(cls)
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(mpack)
+    spark.dataSource.register(HadroLogDataSource)

@@ -50,6 +50,46 @@ def test_datasource_scan(spark, native_dir):
     assert df.rdd.getNumPartitions() == 2
 
 
+def test_batch_reads_each_segment_as_planned(native_dir):
+    """A batch scan plans one slice per segment, ending at the segment's
+    size at planning: frames appended after planning are not read, and a
+    tail torn at planning stays unread even once it completes."""
+    r = H.HadroLogReader({"path": native_dir})
+    parts = r.partitions()
+    with open(os.path.join(native_dir, "00000001.data"), "ab") as f:
+        f.write(b"\x03new")  # completes the torn frame: size 3, b"new"
+    with open(os.path.join(native_dir, "00000000.data"), "ab") as f:
+        f.write(H.encode_record(b"row-late"))
+
+    def payloads(reader, parts):
+        return [row[3] for p in parts for row in reader.read(p)]
+
+    assert payloads(r, parts) == [b"row-one", b"row-two", b"row-three"]
+    fresh = H.HadroLogReader({"path": native_dir})
+    assert payloads(fresh, fresh.partitions()) == [
+        b"row-one", b"row-two", b"row-late", b"row-three", b"new"
+    ]
+
+
+def test_datasource_scan_without_segments_is_empty(spark, tmp_path):
+    """With no segment to read (an empty collection, or segment filters
+    that prune every file) Spark plans one partition of None: it must
+    read as empty, not fail."""
+    from pyspark.sql import functions as F
+
+    H.register(spark)
+    empty = spark.read.format("hadrolog").option("path", str(tmp_path)).load()
+    assert empty.count() == 0
+    (tmp_path / "00000000.data").write_bytes(H.encode_record(b"row"))
+    pruned = (
+        spark.read.format("hadrolog")
+        .option("path", str(tmp_path))
+        .load()
+        .filter(F.col("segment") == "00000009.data")
+    )
+    assert pruned.count() == 0
+
+
 def test_reads_reference_shipped_collection(spark):
     ref = "/root/reference/.tweets"
     if not os.path.isdir(ref):
@@ -220,14 +260,20 @@ def test_aligned_length_property():
     aligned_length returns exactly the bytes of the complete-frame prefix
     — never mid-frame, never past a torn tail — and resuming from a
     previous aligned offset gives the same answer as scanning from 0
-    (the incremental-offset invariant the stream reader relies on)."""
+    (the incremental-offset invariant the stream reader relies on); and
+    slices read between consecutive aligned cuts concatenate to the
+    whole-file walk."""
     import os
     import tempfile
 
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from hadrodb_spark.sources.hadrolog import aligned_length, encode_record
+    from hadrodb_spark.sources.hadrolog import (
+        aligned_length,
+        encode_record,
+        iter_records,
+    )
 
     frames = st.lists(
         st.tuples(st.binary(max_size=40), st.booleans()), min_size=0, max_size=12
@@ -253,10 +299,22 @@ def test_aligned_length_property():
             assert aligned_length(path) == want
             # incremental resume from any earlier frame boundary
             mid = 0
+            cuts = [0]
             for e in encoded:
                 if mid + len(e) <= want:
                     mid += len(e)
+                    cuts.append(mid)
                     assert aligned_length(path, mid) == want
+            # slices between consecutive aligned cuts concatenate to exactly
+            # the whole-file walk (the batch/stream slice reader's invariant)
+            whole = list(iter_records(path, True))
+            assert [p for _, _, p in whole] == [p for p, _ in fs[: len(cuts) - 1]]
+            sliced = [
+                rec
+                for a, b in zip(cuts, cuts[1:])
+                for rec in iter_records(path, True, a, b)
+            ]
+            assert sliced == whole
         finally:
             os.unlink(path)
 

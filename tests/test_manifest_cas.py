@@ -391,11 +391,14 @@ def test_concurrent_writer_fault_drill_small():
     merge_df commits on one collection; the rendezvous FORCES a manifest
     CAS loss on writer A's publish, which re-sequences A's commit; the
     drill asserts clean retry, every on-disk ``_seq`` dir listed and no
-    write dir left, stats/dirs consistency, and batch-LWW equivalence.  The sf1 run is
-    recorded per round in SCALE.md — this keeps the harness itself from
-    rotting."""
+    write dir left, stats/dirs consistency, and batch-LWW equivalence;
+    this test also checks that the drill removes its temp work dir.  The
+    sf1 run is recorded per round in SCALE.md — this keeps the harness
+    itself from rotting."""
+    import glob
     import subprocess
     import sys as _sys
+    import tempfile
 
     script = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -405,6 +408,8 @@ def test_concurrent_writer_fault_drill_small():
     sf_dir = os.environ.get(
         "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
     )  # same override conftest.SF_DIR honors
+    drill_dirs = os.path.join(tempfile.gettempdir(), "hadro_drill_*")
+    before = set(glob.glob(drill_dirs))
     proc = subprocess.run(
         [_sys.executable, script, sf_dir],
         capture_output=True,
@@ -419,3 +424,4 @@ def test_concurrent_writer_fault_drill_small():
     assert report["cas_losses"] >= 1
     assert report["resequenced"] >= 1
     assert report["lww_equivalent"] is True
+    assert set(glob.glob(drill_dirs)) <= before  # the drill removed its work dir

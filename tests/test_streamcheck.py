@@ -367,28 +367,41 @@ def test_left_join_null_extension_through_parquet_sink(spark, tmp_path):
 
 
 def test_sink_fixture_key_follows_collection_source(tmp_path, monkeypatch):
-    """The cached ``_sink`` collection is keyed on ``sources/collection.py``'s
-    source: changing that source changes its key, so a cache written by
-    other code is never read, while the base stream-fixture key (path +
-    size + mtime of the events table) stays put."""
+    """A cached fixture written by repo code is keyed on the source of every
+    module that writes its bytes: the ``_sink`` collection on
+    ``sources/collection.py`` and ``streaming/ingest.py``, the native
+    segment fixtures on ``sources/hadrolog.py`` and ``sources/mpack.py``.
+    Editing any of them changes the key, so a cache written by other code
+    is never read, while the base stream-fixture key (path + size + mtime
+    of the events table) stays put."""
     import os
+    import re
     import shutil
 
+    from hadrodb_spark import config
     from hadrodb_spark.operators import streamcheck as sc
+    from hadrodb_spark.sources import hadrolog
 
-    sources = tmp_path / "sources"
-    sources.mkdir()
-    shutil.copy(os.path.join(sc._SOURCES_DIR, "collection.py"), sources)
-    monkeypatch.setattr(sc, "_SOURCES_DIR", str(sources))
-    monkeypatch.setattr(sc, "scratch_dir", lambda: str(tmp_path))
+    pkg = tmp_path / "pkg"
+    cases = [("sink", sc._SINK_MODULES), ("native", hadrolog.WRITER_MODULES)]
+    for _, modules in cases:
+        for rel in modules:
+            (pkg / rel).parent.mkdir(parents=True, exist_ok=True)
+            shutil.copy(os.path.join(config._PKG_DIR, rel), pkg / rel)
+    monkeypatch.setattr(config, "_PKG_DIR", str(pkg))
+    monkeypatch.setattr(config, "scratch_dir", lambda: str(tmp_path))
     sf = tmp_path / "sf"
     sf.mkdir()
     (sf / "events.parquet").write_bytes(b"events")
-    base = sc._stream_events_dir(str(sf))
-    sink = sc._built_by(str(sf), "sink", "collection")
-    assert sink.startswith(base + "_sink_")
-    with open(sources / "collection.py", "a") as f:
-        f.write("# a format change\n")
-    assert sc._stream_events_dir(str(sf)) == base
-    changed = sc._built_by(str(sf), "sink", "collection")
-    assert changed != sink and changed.startswith(base + "_sink_")
+    base = config.events_fixture_dir(str(sf))
+    # the base dir name is unchanged, so existing base fixtures are reused
+    assert re.fullmatch(r"stream_events_[0-9a-f]{16}", os.path.basename(base))
+    for kind, modules in cases:
+        keys = {config.events_fixture_dir(str(sf), kind, modules)}
+        for rel in modules:
+            with open(pkg / rel, "a") as f:
+                f.write("# a format change\n")
+            assert config.events_fixture_dir(str(sf)) == base
+            key = config.events_fixture_dir(str(sf), kind, modules)
+            assert key.startswith(f"{base}_{kind}_") and key not in keys, rel
+            keys.add(key)

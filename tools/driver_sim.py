@@ -1,8 +1,9 @@
 """Driver-gate simulation: run every ``queries()`` entry (or just the names
 given as argv) against its DuckDB oracle at sf0.01 from a VANILLA session.
 
-Run from OUTSIDE the repo (``cd /tmp && python /root/repo/tools/driver_sim.py``)
+Run from OUTSIDE the checkout (``cd /tmp && python <checkout>/tools/driver_sim.py``)
 so executor-import/cwd bugs surface exactly as they would under the driver.
+It imports the checkout it lives in, so a copy or worktree tests its own code.
 Override the scale dir with SPARK_GRAFT_SIM_SF_DIR.
 """
 
@@ -10,7 +11,7 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 import duckdb
 

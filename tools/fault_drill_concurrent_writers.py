@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -161,6 +162,13 @@ def _writer(role: str, coll_path: str, sf_dir: str, sync_dir: str) -> None:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1.0"
     work = tempfile.mkdtemp(prefix="hadro_drill_")
+    try:
+        return _drill(sf_dir, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _drill(sf_dir: str, work: str) -> int:
     coll_path = os.path.join(work, "orders_coll")
     sync_dir = os.path.join(work, "sync")
     os.makedirs(sync_dir)
