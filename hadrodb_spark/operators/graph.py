@@ -168,16 +168,8 @@ def graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the default limit suffices — a caller pushing depth/cap higher
     raises ``spark.sql.cteRecursionRowLimit`` in their own session.
     Production BFS at 100 TB dedups the frontier per level — that is the
-    iterative DataFrame loop in operators/components.py.
-
-    No recursion-limit override here: Spark reads
-    ``spark.sql.cteRecursionRowLimit`` at EXECUTION (when the caller
-    collects this lazy DataFrame), so a set-here/restore-in-finally pair
-    would be a no-op by then — and a lingering session-wide override would
-    silently change every later recursive query's safety limit.  The sizing
-    argument above keeps the frontier under the default limit; callers
-    pushing depth/cap beyond it must raise the conf in their own session
-    for the query's lifetime."""
+    iterative DataFrame loop in operators/components.py.  (The registry's
+    session clone copies the caller's conf, so a raised limit applies.)"""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
     return spark.sql(_REACH_SQL.format(p="v_"))
 

@@ -17,6 +17,8 @@ Reference semantics verified here:
 
 from __future__ import annotations
 
+import atexit
+import functools
 import shutil
 import tempfile
 
@@ -46,10 +48,20 @@ _DEL_MOD = 7
 _cache: dict[str, HadroCollection] = {}
 
 
+@functools.cache
+def _root() -> str:
+    """This process's one temp dir for the collections built here, removed
+    at exit, never earlier: a returned lazy DataFrame, or a concurrent
+    query, may still read an earlier call's copy."""
+    root = tempfile.mkdtemp(prefix="hadro_kv_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
 def _collection(spark: SparkSession, sf_dir: str) -> HadroCollection:
     if sf_dir in _cache:
         return _cache[sf_dir]
-    path = tempfile.mkdtemp(prefix="hadro_kv_") + "/orders_kv"
+    path = tempfile.mkdtemp(dir=_root()) + "/orders_kv"
     orders = (
         load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") <= _KEY_MAX)
@@ -128,7 +140,7 @@ def compact_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     COPY of the collection and return its post-compaction scan — the oracle is
     the same final-state SQL as ``kv_delete_tombstone``."""
     src = _collection(spark, sf_dir)
-    copy_path = tempfile.mkdtemp(prefix="hadro_compact_") + "/orders_kv"
+    copy_path = tempfile.mkdtemp(dir=_root()) + "/orders_kv"
     shutil.copytree(src.path, copy_path)
     copy = HadroCollection(spark, copy_path)
     copy.compact()
@@ -156,7 +168,7 @@ def compact_range_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions (invariants documented at collection.compact; byte-level
     base-untouched pin lives in tests/test_segment_stats.py)."""
     src = _collection(spark, sf_dir)
-    copy_path = tempfile.mkdtemp(prefix="hadro_cr_") + "/orders_kv"
+    copy_path = tempfile.mkdtemp(dir=_root()) + "/orders_kv"
     shutil.copytree(src.path, copy_path)
     copy = HadroCollection(spark, copy_path)
     copy.compact(upto=2, since=1)
@@ -231,7 +243,7 @@ def kv_merge_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal), 1001-1100 inserted, everything else untouched."""
     key = "merge:" + sf_dir
     if key not in _cache:
-        path = tempfile.mkdtemp(prefix="hadro_merge_") + "/orders_merge"
+        path = tempfile.mkdtemp(dir=_root()) + "/orders_merge"
         orders = (
             load(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") <= _KEY_MAX)
@@ -291,7 +303,7 @@ def kv_optimize_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = "opt:" + sf_dir
     if key not in _cache:
         src = _collection(spark, sf_dir)
-        copy_path = tempfile.mkdtemp(prefix="hadro_opt_") + "/orders_kv"
+        copy_path = tempfile.mkdtemp(dir=_root()) + "/orders_kv"
         shutil.copytree(src.path, copy_path)
         copy = HadroCollection(spark, copy_path)
         copy.optimize(["o_orderkey", "o_totalprice"], zorder=True, target_files=4)
@@ -315,7 +327,7 @@ def kv_export_import_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = "exim:" + sf_dir
     if key not in _cache:
         src = _collection(spark, sf_dir)
-        base = tempfile.mkdtemp(prefix="hadro_exim_")
+        base = tempfile.mkdtemp(dir=_root())
         src.export(base + "/export.parquet")
         fresh = HadroCollection(spark, base + "/fresh", _SCHEMA)
         fresh.import_file(base + "/export.parquet", key_col="o_orderkey")
@@ -388,7 +400,7 @@ def kv_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _collection(spark, sf_dir)
     key = "erase:" + sf_dir
     if key not in _cache:
-        copy_path = tempfile.mkdtemp(prefix="hadro_erase_") + "/orders_kv"
+        copy_path = tempfile.mkdtemp(dir=_root()) + "/orders_kv"
         shutil.copytree(src.path, copy_path)
         copy = HadroCollection(spark, copy_path)
         copy.delete_where(F.col("o_orderkey") % _ERASE_MOD == 0)

@@ -35,15 +35,11 @@ from pyspark.sql.window import Window
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        # events.ts has shipped as parquet TIMESTAMP(NANOS) (which Spark's
-        # vectorized reader rejects — read as raw nanos and convert; µs
-        # truncation, so oracle SQL never compares sub-second precision)
-        # and as TIMESTAMP(MICROS) (reads as TIMESTAMP_NTZ). Normalize
-        # both to an LTZ timestamp under a pinned-UTC session so
-        # date_format/strftime outputs match DuckDB's naive-timestamp
-        # reading under ANY host TZ.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        # events.ts has shipped as parquet TIMESTAMP(NANOS) (read as raw
+        # nanos under session.QUERY_CONFS and converted; µs truncation, so
+        # oracle SQL never compares sub-second precision) and as
+        # TIMESTAMP(MICROS) (reads as TIMESTAMP_NTZ). Both become an LTZ
+        # timestamp, which renders like DuckDB's naive one in UTC.
         df = spark.read.parquet(f"{sf_dir}/events.parquet")
         if dict(df.dtypes)["ts"] == "bigint":  # nanos-as-long era
             df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))

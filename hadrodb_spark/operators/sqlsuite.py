@@ -514,10 +514,6 @@ def _fmt(body: str, p: str) -> str:
 
 
 def _run(spark: SparkSession, sf_dir: str, body: str) -> DataFrame:
-    # timestamp→string rendering follows the session TZ; pin UTC so it
-    # matches DuckDB's naive reading under any host TZ (same contract as
-    # relational.load's events path)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     for t in _TABLES:
         load(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
     return spark.sql(_fmt(body, "v_"))
@@ -757,7 +753,6 @@ def sql_recursive_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hadrodb_spark.operators import shared
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     op = shared.shared_persist(
         ("copurchase_op", spark.sparkContext.applicationId, sf_dir),
         lambda: load(spark, sf_dir, "lineitem")

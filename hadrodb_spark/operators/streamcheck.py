@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from hadrodb_spark.config import build_once, events_fixture_dir, scratch_dir
 from hadrodb_spark.operators.relational import load
+from hadrodb_spark.session import query_session
 from hadrodb_spark.streaming.events import EVENT_SCHEMA, tumbling_counts
 
 ROWS_ONLY: tuple[str, ...] = ()
@@ -39,31 +40,6 @@ ROWS_ONLY: tuple[str, ...] = ()
 #: itself, and the ingest that drives ``append_df`` and writes the
 #: collection's ``_hadro_stream_batch.json`` marker.
 _SINK_MODULES = ("sources/collection.py", "streaming/ingest.py")
-
-
-def _utc_pinned(fn):
-    """Run ``fn`` with the session TZ pinned to UTC, then RESTORE the
-    caller's prior value (r9 ADVICE: the old permanent ``conf.set`` made
-    every later query in a caller-supplied non-UTC session order-
-    dependent).  Safe to restore at return: every TZ-sensitive expression
-    (date_format/date_trunc/window) executes eagerly inside the wrapped
-    body — the compared relation is either fully collected by ``_drain``
-    or a plan over TZ-free types (strings / integers / decimal sums)."""
-
-    @functools.wraps(fn)
-    def wrapper(spark: SparkSession, *args, **kwargs):
-        key = "spark.sql.session.timeZone"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "UTC")
-        try:
-            return fn(spark, *args, **kwargs)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return wrapper
 
 
 _STATE_PARTITIONS = "8"
@@ -76,8 +52,9 @@ _STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
 
 
 def _state_pinned(fn):
-    """Run ``fn`` with ``spark.sql.shuffle.partitions`` pinned to a value
-    sized for the equivalence FIXTURES (save/restore, like ``_utc_pinned``).
+    """Run ``fn`` in a clone of the session (:func:`query_session`) whose
+    ``spark.sql.shuffle.partitions`` is sized for the equivalence FIXTURES;
+    the caller's session keeps its own value.
 
     Why: every stateful streaming operator allocates one state-store
     instance per shuffle partition PER MICRO-BATCH, so a session default of
@@ -88,26 +65,14 @@ def _state_pinned(fn):
     complete-mode tables and append-mode row sets don't depend on the
     layout), so this changes WALL COST ONLY.  On a real cluster the same
     knob is sized UP with executor count — what this pin right-sizes is
-    the certification fixture, not the 100 TB deployment.
-
-    Restore-at-return is safe for the same reason as ``_utc_pinned``: the
-    streaming run and the batch-side aggregation both execute eagerly
-    inside the wrapped body (``_drain`` / explicit collects)."""
+    the certification fixture, not the 100 TB deployment."""
 
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, *args, **kwargs):
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(
-            key, os.environ.get(_STATE_PARTITIONS_ENV, _STATE_PARTITIONS)
-        )
-        try:
-            return fn(spark, *args, **kwargs)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        partitions = os.environ.get(_STATE_PARTITIONS_ENV, _STATE_PARTITIONS)
+        pin = {"spark.sql.shuffle.partitions": partitions}
+        with query_session(spark, pin) as pinned:
+            return fn(pinned, *args, **kwargs)
 
     return wrapper
 
@@ -163,7 +128,6 @@ def _events_fixture(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-@_utc_pinned
 @_state_pinned
 def stream_tumbling_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window counts computed by the STREAMING engine — file
@@ -220,7 +184,6 @@ def _dup_fixture(spark: SparkSession, sf_dir: str) -> str:
     return build_once(events_fixture_dir(sf_dir, "dup"), build)
 
 
-@_utc_pinned
 @_state_pinned
 def stream_dedup_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup state proven against batch semantics: the fixture
@@ -336,7 +299,6 @@ def _session_fixture(spark: SparkSession, sf_dir: str) -> str:
     return build_once(events_fixture_dir(sf_dir, "sess"), build)
 
 
-@_utc_pinned
 @_state_pinned
 def stream_session_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-window MERGE state proven against batch semantics — the
@@ -391,7 +353,6 @@ ORACLE["stream_session_equivalence"] = """
 """
 
 
-@_utc_pinned
 @_state_pinned
 def stream_join_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream INNER join state proven against batch semantics:
@@ -474,7 +435,6 @@ ORACLE["stream_join_equivalence"] = """
 """
 
 
-@_utc_pinned
 def stream_custom_state_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT @_state_pinned: this row's cost is the PANDAS workers folding
     # per-user state, not state-store open/commit — fewer partitions just
@@ -565,7 +525,6 @@ def _sink_fixture(spark: SparkSession, sf_dir: str) -> str:
     return build_once(events_fixture_dir(sf_dir, "sink", _SINK_MODULES), build)
 
 
-@_utc_pinned
 @_state_pinned
 def stream_sink_collection_equivalence(
     spark: SparkSession, sf_dir: str
@@ -609,7 +568,6 @@ ORACLE["stream_sink_collection_equivalence"] = """
 """
 
 
-@_utc_pinned
 @_state_pinned
 def stream_sliding_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OVERLAPPING-window state proven against batch semantics: with a
@@ -684,7 +642,6 @@ def _write_native_wave(spark, sf_dir: str, dest: str, parity: int) -> None:
     )
 
 
-@_utc_pinned
 def stream_hadrolog_source_equivalence(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -880,7 +837,6 @@ def _late_drop_waves_dir(spark: SparkSession, sf_dir: str) -> str:
     return build_once(events_fixture_dir(sf_dir, "late"), build)
 
 
-@_utc_pinned
 @_state_pinned
 def stream_late_drop_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark LATE-DATA DROP certified against batch semantics — the one
@@ -1019,7 +975,6 @@ def _louter_fixture(spark: SparkSession, sf_dir: str) -> str:
     return build_once(events_fixture_dir(sf_dir, "louter"), build)
 
 
-@_utc_pinned
 @_state_pinned
 def stream_left_join_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER join state proven against batch semantics —
@@ -1146,10 +1101,6 @@ def stream_session_sink_equivalence(
     the row the sf10 envelope certifies; the memory-sink twin stays the
     sf ≤ 1 exact-row-set check (see ``MEMORY_SINK_ROWS``).
 
-    No ``_utc_pinned``: the output is session-size integers only — session
-    assignment arithmetic runs on timestamp instants (TZ-free) and no
-    wall-clock rendering reaches the compared relation.
-
     Oracle: DuckDB islands-algorithm sessions over the same events,
     grouped to the identical histogram.  A hash match proves the
     micro-batched session merge AND the file-sink commit protocol
@@ -1196,7 +1147,6 @@ def stream_session_sink_equivalence(
     return spark.createDataFrame(rows, schema).orderBy("session_len")
 
 
-@_utc_pinned
 @_state_pinned
 def stream_join_sink_equivalence(
     spark: SparkSession, sf_dir: str
@@ -1215,9 +1165,8 @@ def stream_join_sink_equivalence(
     sides (each side's watermark tracks only rows passing its own
     event_type filter — an untyped sentinel advances neither, and
     null-extension flushes only when the min watermark passes
-    signup + window).
-
-    ``_utc_pinned`` because ``date_format`` renders wall-clock hours.
+    signup + window).  ``date_format`` renders wall-clock hours, in UTC
+    under the registry's ``QUERY_CONFS``.
 
     Oracle: identical batch left-join SQL as the memory-sink twin — a
     hash match proves outer-join state eviction, null-extension timing,

@@ -4,10 +4,13 @@
 ``(spark, sf_dir) -> DataFrame``; ``ORACLE`` maps the same name to the DuckDB
 SQL twin (absent ⇒ the driver records a weaker rows-only check — reserved
 for genuinely non-SQL-expressible ops).
+Each entry runs in its own clone of the caller's session
+(``session.query_session``), so it never changes the caller's conf.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,11 +51,21 @@ from hadrodb_spark.operators import (
     streamcheck,
     textops,
 )
+from hadrodb_spark.session import query_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+
+
+def _in_query_session(fn: QueryFn) -> QueryFn:
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        with query_session(spark) as session:
+            return fn(session, sf_dir)
+
+    return run
 
 
 def _register(module, only: list[str] | None = None) -> None:
@@ -62,8 +75,7 @@ def _register(module, only: list[str] | None = None) -> None:
     for name in names:
         if name in QUERIES:
             continue
-        fn = getattr(module, name)
-        QUERIES[name] = fn
+        QUERIES[name] = _in_query_session(getattr(module, name))
         if name in oracle:
             ORACLE[name] = oracle[name]
 
@@ -176,4 +188,4 @@ _register(pipeline4)
 
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:
-    return relational.sql_tpch_q1_like(spark, sf_dir)
+    return QUERIES["sql_tpch_q1_like"](spark, sf_dir)

@@ -7,7 +7,9 @@ the Pandas-UDF paths, sane shuffle partitioning).
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -59,6 +61,39 @@ def _state_store_confs() -> dict[str, str]:
     return confs
 
 
+#: Spark SQL settings every query assumes: UTC, so wall-clock renderings
+#: match the oracle's naive timestamps, and TIMESTAMP(NANOS) parquet
+#: (events.ts) read as a long, which Spark's reader otherwise rejects.
+QUERY_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+@contextlib.contextmanager
+def query_session(
+    spark: SparkSession, extra: dict[str, str] | None = None
+) -> Iterator[SparkSession]:
+    """Yield a clone of ``spark`` with :data:`QUERY_CONFS` and ``extra`` set,
+    active on this thread until the block exits.
+
+    The clone copies the caller's runtime conf and temp views and shares its
+    SparkContext and cache; nothing set in it reaches the caller, and
+    DataFrames built in it keep its conf when the caller collects them.  It
+    is made active because Spark looks a Python data source up in the
+    thread's active session, which is per thread, so queries cannot race."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for key, value in {**QUERY_CONFS, **(extra or {})}.items():
+        clone.conf.set(key, value)
+    jsession = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    prev = jsession.getActiveSession()
+    jsession.setActiveSession(clone._jsparkSession)
+    try:
+        yield clone
+    finally:
+        jsession.setActiveSession(prev.get() if prev.isDefined() else None)
+
+
 def get_spark(
     app_name: str = "hadrodb_spark",
     cpus: int | None = None,
@@ -98,7 +133,7 @@ def get_spark(
         # Spark 3.4+; pinned here so clusters with older defaults behave
         # identically — the big-fact ⋈ filtered-dim case at 100 TB).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=QUERY_CONFS)
         # Split parquet scans down to row-group granularity. The local test
         # fixtures are single ~10 MB files — at the 128m default a scan gets
         # ONE task no matter how many cores exist. On a real cluster raise

@@ -576,20 +576,19 @@ def register(spark) -> None:
     to import ``hadrodb_spark`` regardless of the driver's cwd."""
     import glob
     import hashlib
-    import tempfile
     import zipfile
 
     import hadrodb_spark
+    from hadrodb_spark.config import build_once, scratch_dir
 
     pkg_dir = os.path.dirname(os.path.abspath(hadrodb_spark.__file__))
     root = os.path.dirname(pkg_dir)
-    # The zip is named by a digest of its contents, and entry timestamps
-    # are pinned, so identical sources produce byte-identical files:
-    # re-registering in the same session is a SparkContext.addFile no-op,
-    # and a register() after a source edit gets a FRESH name instead of
-    # Spark's "exists and does not match contents" hard error (the
-    # executors' import then still resolves to the first-shipped copy —
-    # mid-session source edits remain unsupported, just non-fatal).
+    # The zip is named by a digest of its contents and built once per
+    # digest under scratch_dir(), so repeat calls ship the same path, and a
+    # register() after a source edit gets a FRESH name instead of Spark's
+    # "exists and does not match contents" hard error (the executors'
+    # import then still resolves to the first-shipped copy — mid-session
+    # source edits remain unsupported, just non-fatal).
     entries = sorted(
         (os.path.relpath(full, root), full)
         for full in glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)
@@ -602,14 +601,18 @@ def register(spark) -> None:
         h.update(rel.encode())
         h.update(data)
         blobs.append((rel, data))
-    zpath = os.path.join(
-        tempfile.mkdtemp(prefix="hadrolog_"),
-        f"hadrodb_spark_{h.hexdigest()[:12]}.zip",
-    )
-    with zipfile.ZipFile(zpath, "w") as z:
-        for rel, data in blobs:
-            z.writestr(zipfile.ZipInfo(rel, date_time=(2020, 1, 1, 0, 0, 0)), data)
-    spark.sparkContext.addPyFile(zpath)
+    name = f"hadrodb_spark_{h.hexdigest()[:12]}"
+
+    def write(staging: str) -> None:
+        with zipfile.ZipFile(os.path.join(staging, f"{name}.zip"), "w") as z:
+            for rel, data in blobs:
+                info = zipfile.ZipInfo(rel, date_time=(2020, 1, 1, 0, 0, 0))
+                z.writestr(info, data)
+
+    built = build_once(os.path.join(scratch_dir(), name), write)
+    # a repeat addPyFile would still grow sys.path and the include list
+    if f"{name}.zip" not in spark.sparkContext._python_includes:
+        spark.sparkContext.addPyFile(os.path.join(built, f"{name}.zip"))
     # default-off in Spark 4.1; required for the reader's pushFilters
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     # The BATCH planner worker resolves imports through the addPyFile

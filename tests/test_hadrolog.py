@@ -90,6 +90,29 @@ def test_datasource_scan_without_segments_is_empty(spark, tmp_path):
     assert pruned.count() == 0
 
 
+def test_register_reuses_one_package_zip(spark):
+    """register() builds the package zip once per content digest under
+    scratch_dir(): repeat calls make no new temp dir and ship the same
+    path."""
+    import tempfile
+
+    from hadrodb_spark.config import scratch_dir
+
+    def shipped() -> list[str]:
+        files = spark.sparkContext.listFiles
+        return [f for f in files if os.path.basename(f).startswith("hadrodb_spark_")]
+
+    tmp = tempfile.gettempdir()
+    before = {n for n in os.listdir(tmp) if n.startswith("hadrolog_")}
+    H.register(spark)
+    first = shipped()
+    H.register(spark)
+    assert shipped() == first and len(first) == 1
+    zip_name = os.path.basename(first[0])
+    assert os.path.isfile(os.path.join(scratch_dir(), zip_name[:-4], zip_name))
+    assert {n for n in os.listdir(tmp) if n.startswith("hadrolog_")} == before
+
+
 def test_reads_reference_shipped_collection(spark):
     ref = "/root/reference/.tweets"
     if not os.path.isdir(ref):

@@ -130,41 +130,50 @@ def test_sliding_window_four_assignments(spark, tmp_path):
     assert got == want
 
 
-def test_state_pinned_saves_and_restores_conf(spark, monkeypatch):
-    """The state-partition pin must (a) apply inside the wrapped body,
-    (b) honor the SPARK_GRAFT_STREAM_STATE_PARTITIONS override, and
-    (c) RESTORE the caller's value even on exception — otherwise one
-    streaming row would silently re-partition every later query in a
-    shared session (the exact bug class the _utc_pinned ADVICE fixed)."""
+def test_state_pinned_never_touches_caller_conf(spark, monkeypatch):
+    """The state-partition pin applies inside the wrapped body (8, or the
+    SPARK_GRAFT_STREAM_STATE_PARTITIONS override), in UTC, while the
+    caller's partition count and time zone never change, also when the
+    body raises."""
+    import pytest as _pytest
+    from pyspark.sql import SparkSession
+
     from hadrodb_spark.operators import streamcheck as sc
 
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
+    key, tz = "spark.sql.shuffle.partitions", "spark.sql.session.timeZone"
+    caller = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    caller.conf.set(key, "3")
+    caller.conf.set(tz, "America/New_York")
     seen = {}
 
     @sc._state_pinned
     def body(spark_):
-        seen["inside"] = spark_.conf.get(key)
+        seen["inside"] = (spark_.conf.get(key), spark_.conf.get(tz))
         return 1
 
-    assert body(spark) == 1
-    assert seen["inside"] == sc._STATE_PARTITIONS
-    assert spark.conf.get(key) == prev
+    def caller_unchanged() -> bool:
+        return (caller.conf.get(key), caller.conf.get(tz)) == (
+            "3", "America/New_York"
+        )
+
+    assert body(caller) == 1
+    assert seen["inside"] == (sc._STATE_PARTITIONS, "UTC")
+    assert caller_unchanged()
 
     monkeypatch.setenv(sc._STATE_PARTITIONS_ENV, "13")
-    body(spark)
-    assert seen["inside"] == "13"
-    assert spark.conf.get(key) == prev
+    body(caller)
+    assert seen["inside"] == ("13", "UTC")
+    assert caller_unchanged()
 
     @sc._state_pinned
     def boom(spark_):
+        seen["boom"] = spark_.conf.get(key)
         raise RuntimeError("body failure")
 
-    import pytest as _pytest
-
     with _pytest.raises(RuntimeError):
-        boom(spark)
-    assert spark.conf.get(key) == prev
+        boom(caller)
+    assert seen["boom"] == "13"
+    assert caller_unchanged()
 
 
 def test_parquet_sink_metadata_log_governs_batch_reads(spark, tmp_path):

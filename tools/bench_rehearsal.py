@@ -160,20 +160,6 @@ def main() -> int:
 
     spark = get_spark("hadrodb_spark_rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
-    state_store = os.environ.get("SPARK_GRAFT_STATE_STORE", "")
-    if state_store == "rocksdb":
-        # The sf>1 state-size posture: the default HDFSBackedStateStore
-        # keeps every partition's key map ON HEAP (two versions each) —
-        # measured OOM at 10M dedup keys in one local[32] JVM.  RocksDB
-        # keeps state off-heap/on-disk with incremental checkpoints; on a
-        # real cluster this is the standard large-state deployment conf,
-        # so rehearsing sf10 streaming rows under it measures the
-        # production topology, not the small-state default.
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
 
     def cpu_stat():
         with open("/proc/stat") as f:
